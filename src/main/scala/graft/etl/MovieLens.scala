@@ -20,7 +20,12 @@ import org.apache.spark.sql.types._
   */
 object MovieLens {
 
-  val DataDir = "/root/reference/data"
+  /** Directory holding the MovieLens-100k files (`u.data`, `u.item`,
+    * `processed_data.parquet`): `SPARK_GRAFT_MOVIELENS_DIR`, else the
+    * reference checkout's `data/` dir. A deployment path, read once.
+    */
+  val DataDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_MOVIELENS_DIR", "/root/reference/data")
 
   /** Typed rows for the Dataset API surface — compile-time checked field
     * access where it helps (ETL plumbing); DataFrame everywhere schemas are

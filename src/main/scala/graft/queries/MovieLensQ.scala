@@ -30,8 +30,11 @@ object MovieLensQ {
   private val ItemCsv =
     "read_csv('/root/repo/fixtures/u_item_utf8.csv', delim='|', header=false, quote='', all_varchar=true)"
 
+  /** `u.data` from the same [[MovieLens.DataDir]] the Spark side reads —
+    * the engine and its oracle can never see different ratings files.
+    */
   private val RatingsCsv =
-    "read_csv('/root/reference/data/u.data', delim='\\t', header=false, " +
+    s"read_csv('${MovieLens.DataDir}/u.data', delim='\\t', header=false, " +
       "columns={'userId':'INTEGER','movieId':'INTEGER','rating':'INTEGER','ts':'INTEGER'})"
 
   /** Genre-name list literal, generated from the same [[MovieLens.genreNames]]

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Store
@@ -222,14 +224,26 @@ class PlanSpec extends SparkSpec {
       "q197_stream_ann_sync" -> "BroadcastNestedLoopJoin", // q196's shape on the streamed index: probeCells head + 1-row flags crossJoin
       "q198_bpe_bin_packing" -> "BroadcastNestedLoopJoin", // 1-row flags frame crossJoin (q68 pattern)
       "q228_ann_lsh_append_recall" -> "BroadcastNestedLoopJoin") // recall BASELINE: broadcast probes × corpus brute scan (q35/q171 shape, deliberately exhaustive — the thing recall is measured against)
-    val hits = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val plan = fn(spark, sf("sf0.001")).queryExecution.sparkPlan.toString
-      Seq("CartesianProduct", "BroadcastNestedLoopJoin")
-        .filter(plan.contains).map(kind => (name, kind))
+    // Plan EVERY query: one that cannot be planned is reported by name with
+    // its error instead of aborting the sweep, so it never hides the rest.
+    val planned = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> Try(fn(spark, sf("sf0.001")).queryExecution.sparkPlan.toString)
+    }
+    val hits = planned.flatMap {
+      case (name, Success(plan)) =>
+        Seq("CartesianProduct", "BroadcastNestedLoopJoin")
+          .filter(plan.contains).map(kind => (name, kind))
+      case _ => Nil
     }
     val unexpected = hits.filterNot { case (n, k) => allow.get(n).contains(k) }
-    assert(unexpected.isEmpty,
-      s"unallowlisted all-pairs join shapes: $unexpected")
+    val unplanned = planned.collect { case (name, Failure(e)) =>
+      s"$name: ${e.getClass.getSimpleName}: " +
+        Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+    }
+    assert(unexpected.isEmpty && unplanned.isEmpty,
+      s"unallowlisted all-pairs join shapes: $unexpected; " +
+        s"${unplanned.size} of ${planned.size} queries could not be planned:\n" +
+        unplanned.mkString("\n"))
   }
 
   test("q74 packing window is hash-shard-partitioned, never a global window") {

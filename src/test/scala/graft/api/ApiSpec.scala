@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.SparkSpec
+import graft.{MovieLensFixture, SparkSpec}
 import graft.etl.MovieLens
 
 /** Pins the serving surface's route/status/envelope contract against the
@@ -10,7 +10,7 @@ import graft.etl.MovieLens
 class ApiSpec extends SparkSpec {
 
   private lazy val service = {
-    val s = new Api.Service(() => MovieLens.movies(spark))
+    val s = new Api.Service(() => MovieLens.movies(spark, MovieLensFixture.dir))
     assert(s.connect(maxRetries = 1, delayMs = 0L))
     s
   }
@@ -102,10 +102,10 @@ class ApiSpec extends SparkSpec {
   test("a posting-index-backed service serves BYTE-equal /search envelopes") {
     import org.apache.spark.sql.functions.{col, concat_ws}
     val withIndex = new Api.Service(
-      () => MovieLens.movies(spark),
+      () => MovieLens.movies(spark, MovieLensFixture.dir),
       sleep = _ => (),
       loadPosting = Some(() => graft.search.Posting.buildPosting(
-        MovieLens.movies(spark), "movieId",
+        MovieLens.movies(spark, MovieLensFixture.dir), "movieId",
         Seq("title" -> col("title"), "genres" -> concat_ws(" ", col("genres"))))))
     assert(withIndex.connect(maxRetries = 1, delayMs = 0L))
     for (q <- Seq("star wras", "toy", "zzzzqq")) {
@@ -140,7 +140,10 @@ class ApiSpec extends SparkSpec {
     var sleeps = 0
     var calls = 0
     val flaky = new Api.Service(
-      () => { calls += 1; if (calls < 3) sys.error("warming up") else MovieLens.movies(spark) },
+      () => {
+        calls += 1
+        if (calls < 3) sys.error("warming up") else MovieLens.movies(spark, MovieLensFixture.dir)
+      },
       sleep = _ => sleeps += 1)
     assert(flaky.connect(maxRetries = 5, delayMs = 10L))
     assert(calls === 3 && sleeps === 2, s"calls=$calls sleeps=$sleeps")

@@ -1,17 +1,17 @@
 package graft.api
 
-import graft.SparkSpec
+import graft.{MovieLensFixture, SparkSpec}
 import graft.etl.MovieLens
 import org.apache.spark.sql.functions._
 
-/** Table-driven replay of the reference API's behaviors
-  * (`/root/reference/src/api.py`) against the real MovieLens table —
-  * SURVEY §5.2 #6.
+/** Table-driven replay of the reference API's behaviors (`src/api.py`)
+  * against the real MovieLens movies table, read from the committed
+  * fixture — SURVEY §5.2 #6.
   */
 class EngineSpec extends SparkSpec {
 
   private lazy val movies = {
-    val m = MovieLens.movies(spark).cache()
+    val m = MovieLens.movies(spark, MovieLensFixture.dir).cache()
     m.count() // materialize once; every test reuses the cached table
     m
   }

@@ -2,7 +2,7 @@ package graft.api
 
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets.UTF_8
-import graft.SparkSpec
+import graft.{MovieLensFixture, SparkSpec}
 import graft.etl.MovieLens
 
 /** End-to-end transport test: real HTTP requests over a real socket
@@ -15,7 +15,7 @@ class HttpApiSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   @volatile private var started = false
 
   private lazy val (server, base) = {
-    val service = new Api.Service(() => MovieLens.movies(spark))
+    val service = new Api.Service(() => MovieLens.movies(spark, MovieLensFixture.dir))
     assert(service.connect(maxRetries = 1, delayMs = 0L))
     val srv = HttpApi.start(service, port = 0)
     started = true

@@ -1,34 +1,38 @@
 package graft.etl
 
-import graft.SparkSpec
+import graft.{MovieLensFixture, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Golden end-to-end invariants measured from the reference's own data
-  * (`/root/reference/data`) — SURVEY §5.2 #2 / BASELINE.md facts.
+  * — SURVEY §5.2 #2 / BASELINE.md facts. The `u.item`-only goldens read the
+  * committed fixture ([[MovieLensFixture.dir]], the same bytes); the ones
+  * needing `u.data` or `processed_data.parquet` read [[MovieLens.DataDir]]
+  * and fail with one precondition message while it lacks them.
   */
 class MovieLensSpec extends SparkSpec {
 
   test("u.item loads 1,682 movies with Latin-1 titles intact") {
-    val m = MovieLens.movies(spark)
+    val m = MovieLens.movies(spark, MovieLensFixture.dir)
     assert(m.count() === 1682L)
     val title543 = m.filter(col("movieId") === 543).select("title").head().getString(0)
     assert(title543.contains("Misérables"), s"mojibake? got: $title543")
   }
 
   test("flag-count histogram matches the measured golden distribution") {
-    val hist = MovieLens.flagCountHistogram(MovieLens.moviesRaw(spark))
+    val hist = MovieLens.flagCountHistogram(MovieLens.moviesRaw(spark, MovieLensFixture.dir))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(hist === Map(1 -> 833L, 2 -> 569L, 3 -> 215L, 4 -> 51L, 5 -> 11L, 6 -> 3L))
   }
 
   test("unknown-only movies 267 and 1373 get empty genre-name arrays") {
-    val genreless = MovieLens.movies(spark)
+    val genreless = MovieLens.movies(spark, MovieLensFixture.dir)
       .filter(size(col("genres")) === 0)
       .select("movieId").collect().map(_.getInt(0)).sorted
     assert(genreless.toSeq === Seq(267, 1373))
   }
 
   test("ratings: 100k rows, all ratings in 1..5, golden distribution") {
+    MovieLensFixture.requireReference("u.data")
     val dist = MovieLens.ratings(spark)
       .groupBy("rating").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -37,6 +41,7 @@ class MovieLensSpec extends SparkSpec {
   }
 
   test("processed join keeps one row per rating (movies unique on movieId)") {
+    MovieLensFixture.requireReference("u.data", "u.item")
     val p = MovieLens.processed(spark)
     assert(p.count() === 100000L)
     assert(p.columns.toSeq ===
@@ -44,6 +49,7 @@ class MovieLensSpec extends SparkSpec {
   }
 
   test("processed table row-matches the reference's own processed_data.parquet") {
+    MovieLensFixture.requireReference("u.data", "u.item", "processed_data.parquet")
     // The reference's actual output (written by preprocessing.py:24) is the
     // ground truth for the join; genres intentionally differ (SURVEY §1.4 —
     // we carry names, it carries flag strings), so compare the shared cols.
@@ -66,7 +72,7 @@ class MovieLensSpec extends SparkSpec {
   }
 
   test("genre-name histogram shifts the two unknown-only movies to bucket 0") {
-    val hist = MovieLens.genreCountHistogram(MovieLens.movies(spark))
+    val hist = MovieLens.genreCountHistogram(MovieLens.movies(spark, MovieLensFixture.dir))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     // name semantics drop `unknown`: 833-flag bucket loses 2 movies to 0
     assert(hist(0) === 2L)
@@ -75,6 +81,7 @@ class MovieLensSpec extends SparkSpec {
   }
 
   test("typed Dataset views expose the same rows with compile-time fields") {
+    MovieLensFixture.requireReference("u.data", "u.item")
     val r = MovieLens.ratingsDs(spark)
     assert(r.filter(_.rating == 5).count() === 21201L) // typed lambda filter
     val toyStory = MovieLens.moviesDs(spark).filter(_.movieId == 1).head()
@@ -83,7 +90,7 @@ class MovieLensSpec extends SparkSpec {
   }
 
   test("top genre is Drama (725 movies)") {
-    val top = MovieLens.topGenres(MovieLens.movies(spark), 3).head()
+    val top = MovieLens.topGenres(MovieLens.movies(spark, MovieLensFixture.dir), 3).head()
     assert(top.getString(0) === "Drama")
     assert(top.getLong(1) === 725L)
   }

@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.SparkSpec
+import graft.{MovieLensFixture, SparkSpec}
 import graft.etl.MovieLens
 import org.apache.spark.sql.functions._
 
@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
 class AlsSpec extends SparkSpec {
 
   test("ALS trains and yields exactly 10 finite recs per user with bounded RMSE") {
+    MovieLensFixture.requireReference("u.data")
     val ratings = MovieLens.ratings(spark)
       .filter(col("userId") <= 150)
       .select("userId", "movieId", "rating")

@@ -1,6 +1,6 @@
 package graft.search
 
-import graft.SparkSpec
+import graft.{MovieLensFixture, SparkSpec}
 import graft.api.Engine
 import graft.etl.MovieLens
 import graft.functions.DeletionVariantsExpr
@@ -45,7 +45,7 @@ class PostingSpec extends SparkSpec {
   }
 
   test("posting search ≡ full-scan fuzzyMultiMatch search on the whole movies corpus") {
-    val movies = MovieLens.movies(spark)
+    val movies = MovieLens.movies(spark, MovieLensFixture.dir)
     val posting = Posting.buildPosting(
       movies, "movieId",
       Seq("title" -> col("title"), "genres" -> concat_ws(" ", col("genres"))))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{MovieLensFixture, SparkSpec}
 import graft.etl.MovieLens
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,7 +14,7 @@ class StoreSpec extends SparkSpec {
     StructField("genres", ArrayType(StringType))))
 
   test("bulk write enforces the declared mapping and round-trips bucketed") {
-    val movies = MovieLens.movies(spark)
+    val movies = MovieLens.movies(spark, MovieLensFixture.dir)
     assert(Store.conforms(movies, moviesSchema))
     Store.bulkWrite(movies, "movies_idx", "movieId", Some(moviesSchema), buckets = 4)
     try {
@@ -39,7 +39,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("non-conforming frame is rejected before any write") {
-    val wrong = MovieLens.movies(spark).withColumn("movieId", col("movieId").cast("long"))
+    val wrong = MovieLens.movies(spark, MovieLensFixture.dir).withColumn("movieId", col("movieId").cast("long"))
     assertThrows[IllegalArgumentException] {
       Store.bulkWrite(wrong, "movies_bad", "movieId", Some(moviesSchema))
     }
