@@ -4,7 +4,6 @@ Each check recomputes what the engine should have produced, in plain
 Python over the generated inputs and the committed fixture, and returns a
 list of failures (empty when the outputs are correct).
 """
-import glob
 import json
 import math
 import os
@@ -27,8 +26,7 @@ def java_trim(s):
 
 
 def check(workload, rundir, fixture):
-    return {"serve_mix": check_serve, "offline_build": check_offline,
-            "battery_hot": check_battery}[workload](rundir, fixture)
+    return {"serve_mix": check_serve, "offline_build": check_offline}[workload](rundir, fixture)
 
 
 # ------------------------------------------------------------------ serving
@@ -264,48 +262,3 @@ def _check_similar(sim, vf):
                             f"recomputed {cos[pos[q], pos[n]]:.6f}, best {best[pos[q], k]:.6f}")
                 break
     return errs[:10]
-
-
-# ------------------------------------------------------------------ battery
-
-def _canon(rows):
-    out = []
-    for r in rows:
-        out.append(tuple("NaN" if isinstance(x, float) and math.isnan(x)
-                         else repr(x) if isinstance(x, float) else str(x) for x in r))
-    return sorted(out)
-
-
-def check_battery(rundir, _fixture):
-    """Each query's result against its DuckDB twin, compared as the
-    engine's tools/check.py compares: columns sorted by name, rows sorted,
-    values exact, and no oracle column of a type that renders differently."""
-    import duckdb
-    out = os.path.join(rundir, "out")
-    oracle = json.load(open(os.path.join(out, "oracle_sql.json")))
-    con = duckdb.connect()
-    for t in ("documents", "embeddings"):
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{rundir}/{t}.parquet'")
-    errs = []
-    for name, sql in sorted(oracle.items()):
-        files = f"{out}/{name}/*.parquet"
-        if not glob.glob(files):
-            errs.append(f"{name}: no result written")
-            continue
-        sdf, odf = con.sql(f"SELECT * FROM '{files}'"), con.sql(sql)
-        scols, ocols = sorted(sdf.columns), sorted(odf.columns)
-        if scols != ocols:
-            errs.append(f"{name}: columns {scols} != oracle {ocols}")
-            continue
-        stypes = dict(zip(sdf.columns, map(str, sdf.types)))
-        hazard = {c: t for c, t in zip(odf.columns, map(str, odf.types))
-                  if t == "HUGEINT" or (t.startswith("DECIMAL") and stypes.get(c) != t)}
-        srows = _canon(con.sql(f"SELECT {', '.join(scols)} FROM '{files}'").fetchall())
-        orows = _canon(con.sql(f"SELECT {', '.join(ocols)} FROM ({sql}) oq").fetchall())
-        if hazard:
-            errs.append(f"{name}: oracle type hazard {hazard}")
-        elif srows != orows:
-            errs.append(f"{name}: {len(srows)} rows differ from the oracle's {len(orows)}")
-        elif not srows:
-            errs.append(f"{name}: empty result")
-    return errs

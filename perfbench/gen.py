@@ -10,8 +10,6 @@ same seed gives byte-identical inputs and the engine sees nothing else:
   MovieLens-100k ratings are not in the repository. A held-out set of
   planted pairs goes to ``heldout.tsv``, which the engine never reads.
 * ``requests``: the serving request mix, one file per client.
-* ``battery_tables``: ``documents`` and ``embeddings`` parquet tables in
-  the shape of the engine's registry test data.
 """
 import os
 
@@ -250,44 +248,3 @@ def requests(seed, out_dir, fixture_path, n_clients=2, n_rounds=60):
                     lines.append(f"search\tGET\t/search\t{qs}\t")
         with open(os.path.join(out_dir, f"requests_{c}.tsv"), "w", encoding="utf-8") as f:
             f.write("\n".join(lines) + "\n")
-
-
-# ------------------------------------------------------------ battery tables
-
-VOCAB = ("join hash row batch scan column customer filter small slow merge order "
-         "vector line table data agg value key stream window a spark part group big "
-         "sort query fast the").split()
-LANGS, LANG_P = ["en", "zh", "es", "de", "fr"], [0.44, 0.15, 0.15, 0.14, 0.12]
-N_DOCS, N_VECS, DIM, DUP_SHARE = 500, 500, 64, 0.05
-
-
-def battery_tables(seed, out_dir):
-    """documents.parquet and embeddings.parquet, in the registry's test-data
-    schema: 500 documents of 10-99 words over a 30-word vocabulary, 5% of
-    them near-duplicates of an earlier document (its text plus ' dup'), and
-    500 random unit vectors of 64 floats with labels 0-9."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    rng = rng_for(seed, 3)
-    texts = []
-    for i in range(N_DOCS):
-        if i > 10 and rng.random() < DUP_SHARE:
-            texts.append(texts[int(rng.integers(i))] + " dup")
-        else:
-            texts.append(" ".join(VOCAB[int(k)] for k in rng.integers(len(VOCAB), size=int(rng.integers(10, 100)))))
-    docs = pa.table({
-        "doc_id": pa.array(range(N_DOCS), pa.int64()),
-        "text": pa.array(texts, pa.string()),
-        "lang": pa.array([LANGS[int(k)] for k in rng.choice(len(LANGS), N_DOCS, p=LANG_P)], pa.string()),
-        "source": pa.array([f"src{i % 20}" for i in range(N_DOCS)], pa.string()),
-        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-    })
-    pq.write_table(docs, os.path.join(out_dir, "documents.parquet"))
-    v = rng.normal(size=(N_VECS, DIM))
-    v = (v / np.linalg.norm(v, axis=1, keepdims=True)).astype(np.float32)
-    emb = pa.table({
-        "vec_id": pa.array(range(N_VECS), pa.int64()),
-        "embedding": pa.array(list(v), pa.list_(pa.float32())),
-        "label": pa.array(rng.integers(0, 10, N_VECS), pa.int32()),
-    })
-    pq.write_table(emb, os.path.join(out_dir, "embeddings.parquet"))

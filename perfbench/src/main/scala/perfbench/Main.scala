@@ -39,7 +39,6 @@ object Main {
     val o = try a.workload match {
       case "serve_mix"     => ServeMix.run(spark, a, sessionS)
       case "offline_build" => OfflineBuild.run(spark, a, sessionS)
-      case "battery_hot"   => BatteryHot.run(spark, a, sessionS)
       case w               => throw new IllegalArgumentException(s"unknown workload $w")
     } finally spark.stop()
     Files.writeString(Paths.get(a.dir, "result.json"), Json.render(Map(

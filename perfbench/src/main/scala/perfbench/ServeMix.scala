@@ -35,12 +35,15 @@ object ServeMix {
   val Clients = 2
   val RoundLen = 10
   val SetupReps = 3
-  val WarmRounds = 1
-  /** Timed rounds per client: a round takes about 5 s on a 4-core host, so
-    * a run measures about `seconds`. The count does not depend on how fast
-    * the host is, so every run sends the same requests.
+  /** Untimed warm-up: client 0's first round, sent alone. Its 10
+    * requests cover every request kind of the mix.
     */
-  def timedRounds(seconds: Int): Int = math.max(1, math.ceil(seconds / 5.0).toInt)
+  val WarmRounds = 1
+  /** Timed rounds per client: two clients take 4–9 s for a round on a
+    * 4-core host, so a run measures about `seconds`. The count does not
+    * depend on how fast the host is, so every run sends the same requests.
+    */
+  def timedRounds(seconds: Int): Int = math.max(1, math.round(seconds / 8.0).toInt)
   private val Boosts = Seq("title" -> 3, "genres" -> 1)
 
   private def load(a: Args, c: Int): IndexedSeq[IndexedSeq[Req]] =
@@ -104,11 +107,10 @@ object ServeMix {
       ()
     }
     try {
-      // warm-up, untimed: the first WarmRounds rounds of every client
       val tw = System.nanoTime()
-      perClient(c => rounds(c).take(WarmRounds).flatten.foreach { r =>
+      rounds(0).take(WarmRounds).flatten.foreach { r =>
         val (s, b, _) = send(port, r); record(r, s, b)
-      })
+      }
       val warmS = (System.nanoTime() - tw) / 1e9
       val setupS = sessionS + Stats.median(builds.map(_._1)) + warmS
       val o =
@@ -137,10 +139,10 @@ object ServeMix {
     Option(errors.peek()).foreach(e => throw e)
   }
 
-  /** Untraced run: every client sends its timed rounds. A non-200 answer
-    * is a failed operation. The op is a
-    * request: `op_p50_ms` is the median over rounds of a round's mean
-    * request time, which weighs the routes by their exact shares.
+  /** Untraced run: every client sends its timed rounds, the rounds after
+    * its first. A non-200 answer is a failed operation. The op is a
+    * request: `op_p50_ms` is each route's median request time, weighed by
+    * the route's exact share of the requests sent.
     */
   private def timed(a: Args, port: Int, rounds: IndexedSeq[IndexedSeq[IndexedSeq[Req]]],
       setupS: Double, record: (Req, Int, String) => Unit): Outcome = {
@@ -162,11 +164,14 @@ object ServeMix {
     }
     val wallS = (System.nanoTime() - t0) / 1e9
     val all = lat.asScala.toSeq
-    def route(r: String) = Stats.median(all.collect { case (`r`, x) => x })
-    val perRoute = Seq("search", "movie", "recommend").map(r => s"${r}_p50_ms" -> route(r))
+    val byRoute = all.groupBy(_._1).map { case (r, xs) => r -> xs.map(_._2) }
+    val perRoute = Seq("search", "movie", "recommend").map { r =>
+      s"${r}_p50_ms" -> Stats.median(byRoute.getOrElse(r, Nil))
+    }
+    val weighted = byRoute.values.map(xs => Stats.median(xs) * xs.size).sum / all.size
     Outcome(all.size.toLong, failed.get,
       Seq("setup_s" -> setupS,
-        "op_p50_ms" -> Stats.median(roundMs.asScala.toSeq) / RoundLen,
+        "op_p50_ms" -> weighted,
         "ops_per_s" -> all.size / wallS),
       perRoute ++ Seq("request_p50_ms" -> Stats.median(all.map(_._2)),
         "serve_rps" -> all.size / wallS, "round_ms" -> roundMs.asScala.toSeq, "requests" -> all.size))
