@@ -3,6 +3,7 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.search.{Analyzer, Scoring}
+import graft.sources.Store
 
 /** Endpoint-equivalent query layer — each reference Flask route
   * (`/root/reference/src/api.py`) compiles to a DataFrame expression over
@@ -148,8 +149,7 @@ object Engine {
   }
 
   /** [[searchWithTotal]] through the posting index: same envelope, the
-    * candidate pre-gated scoring of [[searchViaPosting]]. The total counts
-    * the (small) scored-id frame, not the corpus.
+    * candidate pre-gated scoring of [[searchViaPosting]].
     */
   def searchWithTotalViaPosting(
       movies: DataFrame, posting: DataFrame, query: String,
@@ -158,35 +158,27 @@ object Engine {
     val scores = graft.search.Posting
       .score(posting, terms, Seq("title" -> 3, "genres" -> 1))
       .withColumnRenamed("id", "movieId")
-      .persist()
-    try {
-      val total = scores.count()
-      val page_ = graft.ops.Paging
-        .paginate(movies.join(scores, Seq("movieId")),
-          Seq(col("score").desc, col("movieId")), page, size)
-        .localCheckpoint()
-      (page_, total)
-    } finally scores.unpersist()
+    pageAndTotal(movies.join(scores, Seq("movieId")), page, size)
   }
 
   /** `/search` with the reference's response envelope: the page plus the
     * total hit count (`res["hits"]["total"]["value"]`, `api.py:225`). The
-    * total is a separate aggregate job over the scored frame — NOT a
-    * `count(*) over ()` window, which would single-partition the table.
+    * total counts the scored frame — NOT a `count(*) over ()` window,
+    * which would single-partition the table.
     */
   def searchWithTotal(
-      movies: DataFrame, query: String, page: Int = 1, size: Int = 10): (DataFrame, Long) = {
-    // one scoring scan feeds both jobs: cache hits, count, materialize the
-    // page off the cache (localCheckpoint — blocks are GC'd with the frame),
-    // then release the cache — no per-call leak in a serving session
-    val hits = scoredHits(movies, query).persist()
-    try {
-      val total = hits.count()
-      val page_ = graft.ops.Paging
-        .paginate(hits, Seq(col("score").desc, col("movieId")), page, size)
-        .localCheckpoint()
-      (page_, total)
-    } finally hits.unpersist()
+      movies: DataFrame, query: String, page: Int = 1, size: Int = 10): (DataFrame, Long) =
+    pageAndTotal(scoredHits(movies, query), page, size)
+
+  /** One scoring pass feeds both the page and the total: the scored hits
+    * (at most the corpus's rows) are materialized once through
+    * [[Store.localized]] — driver-resident under its caps, so counting
+    * them runs no job — and the page is cut from that copy.
+    */
+  private def pageAndTotal(hits: DataFrame, page: Int, size: Int): (DataFrame, Long) = {
+    val held = Store.localized(hits)
+    (graft.ops.Paging.paginate(held, Seq(col("score").desc, col("movieId")), page, size),
+      Store.rowCount(held))
   }
 
   /** `/health` analog: the movies table is reachable and non-empty. */

@@ -25,10 +25,15 @@ object MovieLensQ {
 
   /** `u.item` as a DuckDB relation: 24 unnamed varchar columns
     * (5 meta + 19 genre flags), no quoting — mirrors
-    * [[MovieLens.moviesRawSchema]].
+    * [[MovieLens.moviesRawSchema]]. It reads `fixtures/u_item_utf8.csv`
+    * of THIS checkout, resolved against the working directory (the
+    * project root for `run` and the tests), so the twins never replay
+    * another tree's fixture.
     */
-  private val ItemCsv =
-    "read_csv('/root/repo/fixtures/u_item_utf8.csv', delim='|', header=false, quote='', all_varchar=true)"
+  private val ItemCsv = {
+    val csv = java.nio.file.Paths.get("fixtures", "u_item_utf8.csv").toAbsolutePath.toString
+    s"read_csv('${csv.replace("'", "''")}', delim='|', header=false, quote='', all_varchar=true)"
+  }
 
   /** `u.data` from the same [[MovieLens.DataDir]] the Spark side reads —
     * the engine and its oracle can never see different ratings files.

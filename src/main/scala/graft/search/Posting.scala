@@ -53,28 +53,32 @@ object Posting {
   /** Query-side scoring off the posting table: returns (id, score) for
     * every document with score ≥ 1 under the fuzzyMultiMatch contract.
     * `fieldBoosts` must name the same fields the posting was built with.
+    * A term repeated in the query counts once per occurrence, as in
+    * [[Scoring.fuzzyMultiMatch]].
     */
   def score(
       posting: DataFrame, terms: Seq[String], fieldBoosts: Seq[(String, Int)]): DataFrame = {
     val spark = posting.sparkSession
     import spark.implicits._
-    val qv = terms.map(_.toLowerCase).distinct.flatMap { t =>
+    val lowered = terms.map(_.toLowerCase)
+    val qv = lowered.distinct.flatMap { t =>
       val budget = Scoring.autoFuzz(t.length)
-      DeletionVariantsExpr.variantsOf(t, budget).map(v => (t, budget, v))
-    }.toDF("term", "budget", "variant")
+      val occurrences = lowered.count(_ == t)
+      DeletionVariantsExpr.variantsOf(t, budget).map(v => (t, budget, occurrences, v))
+    }.toDF("term", "budget", "occurrences", "variant")
     // SymSpell join = candidate superset; thresholded levenshtein is the
     // exact gate (budget 0 degenerates to distance 0 = equality)
     val dist = levenshtein(col("token"), col("term"), MaxDeletes)
     val matched = posting
       .join(broadcast(qv), Seq("variant"))
       .filter(dist >= 0 && dist <= col("budget"))
-      .select(col("id"), col("field"), col("term"))
+      .select(col("id"), col("field"), col("term"), col("occurrences"))
       .distinct() // one boost per matched (field, term), however many tokens hit
     val boost = fieldBoosts
       .map { case (f, b) => when(col("field") === f, lit(b)) }
       .reduce(_.otherwise(_))
     matched
-      .withColumn("boost", boost)
+      .withColumn("boost", boost * col("occurrences"))
       .groupBy(col("id"))
       .agg(sum(col("boost")).cast("int").as("score"))
   }

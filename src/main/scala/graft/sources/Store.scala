@@ -234,6 +234,12 @@ object Store {
       java.util.Arrays.asList(rows: _*), df.schema)
   }
 
+  /** `df.count()`, read off the driver-resident rows when `df` is a
+    * [[localized]] copy under the cap (no job), counted by Spark otherwise.
+    */
+  private[graft] def rowCount(df: DataFrame): Long =
+    localRelationOf(df).map(_.data.length.toLong).getOrElse(df.count())
+
   /** Whether `df` is driver-resident (a LocalRelation under the local
     * cap) — what the streaming sinks branch on to skip `persist()`
     * (caching a LocalRelation wraps it in an InMemoryRelation, which

@@ -417,23 +417,12 @@ class PlanSpec extends SparkSpec {
     // depth independence, made executable: a shallow resume and a
     // near-the-end resume run the SAME number of Spark jobs — no term
     // in the plan grows with cursor depth
-    def jobsOf(last: Seq[Any]): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          n.incrementAndGet(); ()
-        }
-      }
-      Thread.sleep(500) // drain stragglers off the async bus
-      spark.sparkContext.addSparkListener(listener)
-      try {
+    def jobsOf(last: Seq[Any]): Int =
+      org.apache.spark.SpecBus.jobsDuring(spark.sparkContext) {
         Paging.searchAfter(Tables.orders(spark, dir),
           Seq(("o_orderkey", true)), Some(last), 10).collect()
-        Thread.sleep(500)
-        n.get
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+        ()
+      }
     val shallow = jobsOf(Seq(5L))
     val deep = jobsOf(Seq(5900000L)) // near the key-space end at sf0.001
     assert(shallow == deep,
@@ -499,12 +488,12 @@ class PlanSpec extends SparkSpec {
         ()
       }
     }
-    // let earlier tests' straggler events drain off the async bus
-    Thread.sleep(1500)
+    // keep earlier tests' queued events out of the window
+    org.apache.spark.SpecBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       SparkEntry.queries("q24_ngram_jaccard_pairs")(spark, sf("sf0.001"))
-      Thread.sleep(1500) // listener bus is async; any construction-time job has already run
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
       assert(jobs.isEmpty,
         s"query construction submitted Spark job(s) — driver-side pass is back: $jobs")
     } finally spark.sparkContext.removeSparkListener(listener)

@@ -1,5 +1,7 @@
 package graft.api
 
+import org.apache.spark.SpecBus
+
 import graft.{MovieLensFixture, SparkSpec}
 import graft.etl.MovieLens
 
@@ -99,22 +101,41 @@ class ApiSpec extends SparkSpec {
       params = Map("q" -> "star", "size" -> "1.5")).status === 500)
   }
 
-  test("a posting-index-backed service serves BYTE-equal /search envelopes") {
+  private lazy val withIndex = {
     import org.apache.spark.sql.functions.{col, concat_ws}
-    val withIndex = new Api.Service(
+    val s = new Api.Service(
       () => MovieLens.movies(spark, MovieLensFixture.dir),
       sleep = _ => (),
       loadPosting = Some(() => graft.search.Posting.buildPosting(
         MovieLens.movies(spark, MovieLensFixture.dir), "movieId",
         Seq("title" -> col("title"), "genres" -> concat_ws(" ", col("genres"))))))
-    assert(withIndex.connect(maxRetries = 1, delayMs = 0L))
-    for (q <- Seq("star wras", "toy", "zzzzqq")) {
+    assert(s.connect(maxRetries = 1, delayMs = 0L))
+    s
+  }
+
+  test("a posting-index-backed service serves BYTE-equal /search envelopes") {
+    // a repeated term counts once per occurrence on both routes
+    for (q <- Seq("star wras", "toy", "zzzzqq", "western western")) {
       val plain = service.handle("GET", "/search", params = Map("q" -> q, "size" -> "25"))
       val indexed = withIndex.handle("GET", "/search", params = Map("q" -> q, "size" -> "25"))
       assert(Api.Json.render(indexed.body) === Api.Json.render(plain.body),
         s"posting-backed /search diverged for '$q'")
       assert(indexed.status === plain.status)
     }
+  }
+
+  test("a connected service answers /health with no Spark job and /movie with at most one") {
+    // connect materializes the served tables; a request reads that copy
+    // instead of re-planning and re-scanning the source table
+    val sc = spark.sparkContext
+    val health = SpecBus.jobsDuring(sc) {
+      assert(withIndex.handle("GET", "/health").status === 200)
+    }
+    val movie = SpecBus.jobsDuring(sc) {
+      assert(withIndex.handle("GET", "/movie/1").body("movieId") === 1)
+    }
+    assert(health === 0, s"/health ran $health Spark jobs")
+    assert(movie <= 1, s"/movie/1 ran $movie Spark jobs")
   }
 
   test("search pages are disjoint and sized like the reference's from/size math") {

@@ -107,14 +107,8 @@ class BandIndexSpec extends SparkSpec {
       }
     }
     def quiesce(): Long = {
-      var prev = bytesRead.get(); var stable = 0; var polls = 0
-      while (stable < 3 && polls < 100) {
-        Thread.sleep(100)
-        val cur = bytesRead.get()
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        polls += 1
-      }
-      prev
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+      bytesRead.get()
     }
     def probeBytes(): (Set[(Long, Long)], Long) = {
       quiesce()
@@ -273,19 +267,8 @@ class BandIndexSpec extends SparkSpec {
     // CONSTRUCTION still pays the index read's schema job (readBandCells),
     // but the distributed route pays that PLUS the distinct+collect — so
     // local construction must run strictly fewer jobs
-    def jobsDuring(f: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          n.incrementAndGet(); ()
-        }
-      }
-      Thread.sleep(300)
-      spark.sparkContext.addSparkListener(l)
-      try { f; Thread.sleep(300); n.get }
-      finally spark.sparkContext.removeSparkListener(l)
-    }
+    def jobsDuring(f: => Unit): Int =
+      org.apache.spark.SpecBus.jobsDuring(spark.sparkContext)(f)
     val jLocal = jobsDuring {
       Dedup.probeSimhashBandIndex(spark, path, local, "media_id",
         maxHamming = 3, sigBits = 64); ()

@@ -50,8 +50,10 @@ class PostingSpec extends SparkSpec {
       movies, "movieId",
       Seq("title" -> col("title"), "genres" -> concat_ws(" ", col("genres"))))
     // span the AUTO budget regimes: exact-only (len<3), 1-edit (3..5),
-    // 2-edit (>5), multi-term, typo'd, and a no-hit query
-    val queries = Seq("star wras", "toy", "misarables", "of", "amadeus philadelphia", "zzzzqq")
+    // 2-edit (>5), multi-term, typo'd, a no-hit query, and repeated terms
+    // (each occurrence scores, in any letter case)
+    val queries = Seq("star wras", "toy", "misarables", "of", "amadeus philadelphia", "zzzzqq",
+      "western western", "Star star wras")
     for (q <- queries) {
       val full = Engine.search(movies, q, page = 1, size = 50)
         .select("movieId", "score").collect().map(r => (r.getInt(0), r.getInt(1))).toSeq

@@ -70,19 +70,7 @@ class StoreSpec extends SparkSpec {
     Store.bulkWrite(base, "dstage_b", "k", buckets = 4)
     try {
       val rows = Seq((7L, "X7"), (123L, "X123"), (401L, "NEW"), (88L, "X88"))
-      def jobs(f: => Unit): Int = {
-        val n = new java.util.concurrent.atomic.AtomicInteger
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            n.incrementAndGet(); ()
-          }
-        }
-        Thread.sleep(300)
-        spark.sparkContext.addSparkListener(l)
-        try { f; Thread.sleep(300); n.get }
-        finally spark.sparkContext.removeSparkListener(l)
-      }
+      def jobs(f: => Unit): Int = org.apache.spark.SpecBus.jobsDuring(spark.sparkContext)(f)
       // LOCAL frame: the whole upsert — validation, routing, staged write
       // — must run driver-side, zero Spark jobs
       val jLocal = jobs {
@@ -757,19 +745,7 @@ class StoreSpec extends SparkSpec {
     // probe disappears — observable as strictly fewer Spark jobs
     val df = spark.range(0L, 100000L, 1L, 8)
       .select(col("id"), (col("id") * 2L).as("v"))
-    def jobs(f: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          n.incrementAndGet(); ()
-        }
-      }
-      Thread.sleep(300)
-      spark.sparkContext.addSparkListener(l)
-      try { f; Thread.sleep(300); n.get }
-      finally spark.sparkContext.removeSparkListener(l)
-    }
+    def jobs(f: => Unit): Int = org.apache.spark.SpecBus.jobsDuring(spark.sparkContext)(f)
     val jDefault = jobs {
       assert(Store.localized(df.filter(col("id") >= 0L), cap = 100).count() === 100000L)
     }

@@ -496,19 +496,8 @@ class StreamIndexPruneSpec extends SparkSpec {
         .toDF("k", "v").localCheckpoint()
     val singles = Seq("ms_kll_tab", "ms_hll_tab", "ms_cms_tab")
     (singles :+ "ms_multi_tab").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    def countJobs(f: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          n.incrementAndGet(); ()
-        }
-      }
-      Thread.sleep(500)
-      spark.sparkContext.addSparkListener(l)
-      try { f; Thread.sleep(500); n.get }
-      finally spark.sparkContext.removeSparkListener(l)
-    }
+    def countJobs(f: => Unit): Int =
+      org.apache.spark.SpecBus.jobsDuring(spark.sparkContext)(f)
     // seed both shapes (table creation paths excluded from the measure)
     def applySingles(b: DataFrame, id: Long): Unit = {
       EventStream.applyGroupedQuantileBatch(b, toKV, "ms_kll_tab", id, k = 200)
