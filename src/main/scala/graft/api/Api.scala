@@ -18,8 +18,8 @@ import graft.sources.Store
   * reference materializes its ES hit lists: ≤5 rows (recommend), 1 row
   * (movie), ≤100 rows (one search page). The other driver-resident data
   * stays under [[graft.sources.Store.localized]]'s caps: the movies
-  * snapshot `connect` holds, and a search's scored hits, which feed its
-  * page and its total.
+  * snapshot `connect` holds, and the ranked hit lists of the queries a
+  * service has answered, which feed every page and total.
   */
 object Api {
 
@@ -27,6 +27,46 @@ object Api {
 
   private def err(status: Int, message: String) =
     Response(status, Map("error" -> message))
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.api.Api")
+
+  /** The bare 500 envelope for a request that threw. The client sees no
+    * detail, as in the reference; the log gets one WARN line naming the
+    * route and the exception.
+    */
+  private[api] def internalError(route: String, e: Throwable): Response = {
+    log.warn(s"500 on $route: ${e.getClass.getName}: ${e.getMessage}")
+    err(500, "Internal server error")
+  }
+
+  /** Ranked hit lists keyed by analyzed query terms, least recently used
+    * first out once they hold more than `budgetRows` rows in all (an
+    * empty list weighs one row). Only the map operations lock; a miss is
+    * ranked outside the lock and offered with [[putIfAbsent]], so two
+    * requests racing on one new query may both rank it, and both serve
+    * the list that was stored first.
+    */
+  private final class HeldHits(budgetRows: Long) {
+    private val lru =
+      new java.util.LinkedHashMap[Seq[String], Engine.Ranked](16, 0.75f, true)
+    private var rows = 0L
+    private def weight(r: Engine.Ranked): Long = math.max(1, r.rows.length).toLong
+
+    def get(key: Seq[String]): Option[Engine.Ranked] = synchronized(Option(lru.get(key)))
+
+    def putIfAbsent(key: Seq[String], r: Engine.Ranked): Engine.Ranked = synchronized {
+      Option(lru.get(key)).getOrElse {
+        lru.put(key, r)
+        rows += weight(r)
+        val eldest = lru.values.iterator
+        while (rows > budgetRows && eldest.hasNext) {
+          val e = eldest.next()
+          if (e ne r) { rows -= weight(e); eldest.remove() }
+        }
+        r
+      }
+    }
+  }
 
   /** Minimal JSON renderer for response bodies (strings, numbers, booleans,
     * null, Seq, Map) — enough to serve every envelope the app produces.
@@ -86,9 +126,19 @@ object Api {
     *    count). It stays distributed: a driver-resident copy would be
     *    re-shipped to the executors by every `/search`.
     *  - The availability probe (`/health` and every guarded route)
-    *    checks the held movies snapshot.
+    *    reads a flag `connect` sets from the held movies snapshot, so it
+    *    plans no query.
+    *  - `/search` ranks each distinct query once: the ranked hit list
+    *    ([[Engine.ranked]], at most [[graft.ops.Paging.MaxResultWindow]]
+    *    rows plus the total) is held under the query's analyzed terms
+    *    ([[Engine.terms]]), which is all either scorer sees. Its first
+    *    page, later pages and repeats are slices of that list and run no
+    *    Spark job. The lists are bounded by
+    *    [[graft.sources.Store.MaxLocalStatsRows]] held rows in all,
+    *    least recently used evicted first.
     *  - A rebuilt Store table is served only after a new `Service`
-    *    connects.
+    *    connects: the held snapshot and the held hit lists live and die
+    *    with the `Service`.
     *
     * @param loadMovies called once on first use (the ES-client analog);
     *                   a throwing loader = unavailable backend
@@ -115,10 +165,10 @@ object Api {
       new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
     private val posting =
       new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
-
-    private def ping(): Boolean =
-      try movies.get().exists(m => Engine.health(m))
-      catch { case _: Exception => false }
+    // the availability probe: set by connect after `movies`, read by
+    // every guarded request
+    @volatile private var up = false
+    private val held = new HeldHits(Store.MaxLocalStatsRows.toLong)
 
     /** Connected movies table; handlers run behind [[guarded]], so a miss
       * here is a bug, not a user-visible state.
@@ -134,7 +184,8 @@ object Api {
         try {
           if (movies.get().isEmpty) movies.set(Some(Store.localized(loadMovies())))
           if (posting.get().isEmpty) posting.set(loadPosting.map(l => cached(l())))
-          if (ping()) return true
+          up = Engine.health(backend)
+          if (up) return true
         } catch { case _: Exception => () }
         attempt += 1
         if (attempt < maxRetries) sleep(delayMs)
@@ -159,7 +210,7 @@ object Api {
         params: Map[String, String] = Map.empty,
         body: Option[Map[String, Any]] = None): Response =
       try route(method, path, params, body)
-      catch { case _: Exception => err(500, "Internal server error") }
+      catch { case e: Exception => internalError(s"$method $path", e) }
 
     private def route(
         method: String, path: String,
@@ -175,9 +226,9 @@ object Api {
       }
     }
 
-    /** `require_elasticsearch` analog: probe per request, 503 when down. */
+    /** `require_elasticsearch` analog: 503 per request while down. */
     private def guarded(r: => Response): Response =
-      if (!ping()) err(503, "Service temporarily unavailable") else r
+      if (!up) err(503, "Service temporarily unavailable") else r
 
     // ---- routes -------------------------------------------------------
 
@@ -194,10 +245,10 @@ object Api {
     private def healthRoute(): Response = {
       // the reference reports its backend under "elasticsearch"
       // (api.py:245-251); this engine's backend is the movies store
-      val up = ping()
-      Response(if (up) 200 else 503, Map(
+      val ok = up
+      Response(if (ok) 200 else 503, Map(
         "status" -> "OK",
-        "store" -> (if (up) "OK" else "NOT CONNECTED"),
+        "store" -> (if (ok) "OK" else "NOT CONNECTED"),
         "version" -> "1.0.0"))
     }
 
@@ -233,6 +284,13 @@ object Api {
         case _                => err(404, "Movie not found")
       }
 
+    /** The query's held ranked list, ranked now on a miss. */
+    private def rankedHits(q: String): Engine.Ranked = {
+      val key = Engine.terms(q)
+      held.get(key).getOrElse(
+        held.putIfAbsent(key, Engine.ranked(backend, q, posting.get())))
+    }
+
     private def searchRoute(params: Map[String, String]): Response =
       params.get("q").filter(_.nonEmpty) match {
         case None => err(400, "Query parameter 'q' is required")
@@ -261,15 +319,12 @@ object Api {
           } yield {
             val page = if (rawPage < 1) 1 else rawPage
             val size = if (rawSize < 1 || rawSize > 100) 10 else rawSize
-            val (pageDf, total) = posting.get() match {
-              case Some(p) => Engine.searchWithTotalViaPosting(backend, p, q, page, size)
-              case None    => Engine.searchWithTotal(backend, q, page, size)
-            }
+            val hits = rankedHits(q)
             Response(200, Map(
-              "movies" -> pageDf.collect().toSeq.map(doc),
+              "movies" -> hits.page(page, size).map(doc),
               "page" -> page,
               "size" -> size,
-              "total" -> total))
+              "total" -> hits.total))
           }).merge
       }
   }

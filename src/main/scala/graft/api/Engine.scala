@@ -1,9 +1,11 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Row}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.search.{Analyzer, Scoring}
-import graft.sources.Store
 
 /** Endpoint-equivalent query layer — each reference Flask route
   * (`/root/reference/src/api.py`) compiles to a DataFrame expression over
@@ -84,45 +86,56 @@ object Engine {
   def movieById(movies: DataFrame, movieId: Int): DataFrame =
     movies.filter(col("movieId") === movieId).limit(1)
 
-  /** Q7 + O3: `/search` — multi_match over title^3 + genres^1 with
-    * fuzziness AUTO, paginated with the reference's clamps
-    * (`api.py:196-221`: page ≥ 1, 1 ≤ size ≤ 100).
+  /** Q7: a query's analyzed terms, what both scorers see — lowercased,
+    * whitespace-split, blanks dropped.
     */
+  def terms(query: String): Seq[String] =
+    query.toLowerCase.trim.split("\\s+").toSeq.filter(_.nonEmpty)
+
+  /** The `/search` relevance order: score desc, then movieId — a total
+    * order, so page boundaries are deterministic.
+    */
+  private val ByRank = Seq(col("score").desc, col("movieId"))
+
   /** Shared scoring contract for both search endpoints: title^3 + genres^1
     * fuzzy multi-match, blank query → no hits (the reference 400s it,
     * api.py:191-194), relevance threshold score ≥ 1.
     */
   private def scoredHits(movies: DataFrame, query: String): DataFrame = {
-    val terms = query.toLowerCase.trim.split("\\s+").toSeq.filter(_.nonEmpty)
+    val ts = terms(query)
     val scored =
-      if (terms.isEmpty) movies.withColumn("score", lit(0))
+      if (ts.isEmpty) movies.withColumn("score", lit(0))
       else movies.withColumn("score",
-        Scoring.fuzzyMultiMatch(terms,
+        Scoring.fuzzyMultiMatch(ts,
           Seq(col("title") -> 3, concat_ws(" ", col("genres")) -> 1)))
     scored.filter(col("score") >= 1)
   }
 
+  /** The same hits scored off a precomputed posting table
+    * ([[graft.search.Posting]]): candidates are pre-gated by the
+    * symmetric-delete equi-join, so the exact levenshtein touches only
+    * join survivors instead of the whole corpus.
+    */
+  private def postingHits(movies: DataFrame, posting: DataFrame, query: String): DataFrame = {
+    val scores = graft.search.Posting
+      .score(posting, terms(query), Seq("title" -> 3, "genres" -> 1))
+      .withColumnRenamed("id", "movieId")
+    movies.join(scores, Seq("movieId")) // inner: only score ≥ 1 ids exist
+  }
+
   def search(movies: DataFrame, query: String, page: Int = 1, size: Int = 10): DataFrame =
-    graft.ops.Paging.paginate(
-      scoredHits(movies, query), Seq(col("score").desc, col("movieId")), page, size)
+    graft.ops.Paging.paginate(scoredHits(movies, query), ByRank, page, size)
 
   /** `/search` off a precomputed posting table ([[graft.search.Posting]]):
-    * same scoring contract and envelope as [[search]], but candidates are
-    * pre-gated by the symmetric-delete equi-join, so the exact levenshtein
-    * touches only join survivors instead of the whole corpus — the path
-    * that holds at 100 TB (PlanSpec pins the plan shape; the q67 gate pins
-    * result equality against the q45 oracle).
+    * same scoring contract and envelope as [[search]], through
+    * [[postingHits]] — the path that holds at 100 TB (PlanSpec pins the
+    * plan shape; the q67 gate pins result equality against the q45
+    * oracle).
     */
   def searchViaPosting(
       movies: DataFrame, posting: DataFrame, query: String,
-      page: Int = 1, size: Int = 10): DataFrame = {
-    val terms = query.toLowerCase.trim.split("\\s+").toSeq.filter(_.nonEmpty)
-    val scores = graft.search.Posting
-      .score(posting, terms, Seq("title" -> 3, "genres" -> 1))
-      .withColumnRenamed("id", "movieId")
-    val hits = movies.join(scores, Seq("movieId")) // inner: only score ≥ 1 ids exist
-    graft.ops.Paging.paginate(hits, Seq(col("score").desc, col("movieId")), page, size)
-  }
+      page: Int = 1, size: Int = 10): DataFrame =
+    graft.ops.Paging.paginate(postingHits(movies, posting, query), ByRank, page, size)
 
   /** `/search` ranked by IDF-WEIGHTED relevance off the posting table
     * ([[graft.search.Posting.scoreIdf]]): rare matched terms outrank
@@ -135,51 +148,67 @@ object Engine {
   def searchViaPostingIdf(
       movies: DataFrame, posting: DataFrame, query: String,
       page: Int = 1, size: Int = 10, nDocs: Option[Long] = None): DataFrame = {
-    val terms = query.toLowerCase.trim.split("\\s+").toSeq.filter(_.nonEmpty)
     // nDocs is a per-corpus-snapshot constant: a serving caller computes
     // it ONCE at posting-build time and passes it here — the None
     // fallback counts the corpus per request, acceptable in tests and
     // gates, a full table scan per query at serving scale (r12 review)
     val scores = graft.search.Posting
-      .scoreIdf(posting, terms, Seq("title" -> 3, "genres" -> 1),
+      .scoreIdf(posting, terms(query), Seq("title" -> 3, "genres" -> 1),
         nDocs.getOrElse(movies.count()))
       .withColumnRenamed("id", "movieId")
     val hits = movies.join(scores, Seq("movieId"))
-    graft.ops.Paging.paginate(hits, Seq(col("score").desc, col("movieId")), page, size)
+    graft.ops.Paging.paginate(hits, ByRank, page, size)
   }
+
+  /** A query's hits in relevance order, cut at
+    * [[graft.ops.Paging.MaxResultWindow]] (no offset page reaches deeper),
+    * with the full hit count and the hits' schema.
+    */
+  final case class Ranked(rows: IndexedSeq[Row], total: Long, schema: StructType) {
+
+    /** Page `page` of `size` rows: the one paging implementation behind
+      * every `/search` envelope. Past the offset window it throws, as
+      * [[graft.ops.Paging.window]] does, so a route answers 500 as an
+      * over-deep ES from/size is refused.
+      */
+    def page(page: Int, size: Int): IndexedSeq[Row] = {
+      val (from, until) = graft.ops.Paging.window(page, size)
+      rows.slice(from, until)
+    }
+  }
+
+  /** Ranks a query once for every page of it: one ordered take of at most
+    * [[graft.ops.Paging.MaxResultWindow]] rows, scored through the posting
+    * index when one is given, else by the full scan. `total` is the
+    * taken row count when the list is shorter than the window; otherwise
+    * one count job gives it.
+    */
+  def ranked(movies: DataFrame, query: String, posting: Option[DataFrame] = None): Ranked = {
+    val hits = posting.fold(scoredHits(movies, query))(postingHits(movies, _, query))
+    val top = hits.orderBy(ByRank: _*).limit(graft.ops.Paging.MaxResultWindow)
+    val rows = top.collect().toIndexedSeq
+    val total =
+      if (rows.length < graft.ops.Paging.MaxResultWindow) rows.length.toLong else hits.count()
+    Ranked(rows, total, top.schema)
+  }
+
+  private def pageOf(spark: SparkSession, r: Ranked, page: Int, size: Int): (DataFrame, Long) =
+    (spark.createDataFrame(r.page(page, size).asJava, r.schema), r.total)
 
   /** [[searchWithTotal]] through the posting index: same envelope, the
     * candidate pre-gated scoring of [[searchViaPosting]].
     */
   def searchWithTotalViaPosting(
       movies: DataFrame, posting: DataFrame, query: String,
-      page: Int = 1, size: Int = 10): (DataFrame, Long) = {
-    val terms = query.toLowerCase.trim.split("\\s+").toSeq.filter(_.nonEmpty)
-    val scores = graft.search.Posting
-      .score(posting, terms, Seq("title" -> 3, "genres" -> 1))
-      .withColumnRenamed("id", "movieId")
-    pageAndTotal(movies.join(scores, Seq("movieId")), page, size)
-  }
+      page: Int = 1, size: Int = 10): (DataFrame, Long) =
+    pageOf(movies.sparkSession, ranked(movies, query, Some(posting)), page, size)
 
   /** `/search` with the reference's response envelope: the page plus the
-    * total hit count (`res["hits"]["total"]["value"]`, `api.py:225`). The
-    * total counts the scored frame — NOT a `count(*) over ()` window,
-    * which would single-partition the table.
+    * total hit count (`res["hits"]["total"]["value"]`, `api.py:225`).
     */
   def searchWithTotal(
       movies: DataFrame, query: String, page: Int = 1, size: Int = 10): (DataFrame, Long) =
-    pageAndTotal(scoredHits(movies, query), page, size)
-
-  /** One scoring pass feeds both the page and the total: the scored hits
-    * (at most the corpus's rows) are materialized once through
-    * [[Store.localized]] — driver-resident under its caps, so counting
-    * them runs no job — and the page is cut from that copy.
-    */
-  private def pageAndTotal(hits: DataFrame, page: Int, size: Int): (DataFrame, Long) = {
-    val held = Store.localized(hits)
-    (graft.ops.Paging.paginate(held, Seq(col("score").desc, col("movieId")), page, size),
-      Store.rowCount(held))
-  }
+    pageOf(movies.sparkSession, ranked(movies, query), page, size)
 
   /** `/health` analog: the movies table is reachable and non-empty. */
   def health(movies: DataFrame): Boolean = !movies.isEmpty

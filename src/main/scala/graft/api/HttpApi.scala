@@ -48,7 +48,8 @@ object HttpApi {
             } else None
           service.handle(method, path, params, body)
         } catch {
-          case _: Exception => Api.Response(500, Map("error" -> "Internal server error"))
+          case e: Exception => Api.internalError(
+            s"${exchange.getRequestMethod} ${exchange.getRequestURI.getPath}", e)
         }
       val bytes = Api.Json.render(response.body).getBytes(UTF_8)
       exchange.getResponseHeaders.set("Content-Type", "application/json")

@@ -33,22 +33,32 @@ object Paging {
   def clamp(page: Int, size: Int, maxSize: Int = 100): (Int, Int) =
     (math.max(1, page), math.min(maxSize, math.max(1, size)))
 
-  /** `orderBy` must be a total order (add a unique tie-break column) or
-    * page boundaries are nondeterministic. Refuses (after clamping)
-    * `page·size > maxWindow` — the ES behavior; see the object scaladoc.
+  /** The clamped page's row range `[from, until)` in a total order.
+    * Refuses `page·size > maxWindow` — the ES behavior; see the object
+    * scaladoc.
     */
-  def paginate(df: DataFrame, orderBy: Seq[Column], page: Int, size: Int,
-      maxSize: Int = 100, maxWindow: Int = MaxResultWindow): DataFrame = {
+  def window(page: Int, size: Int,
+      maxSize: Int = 100, maxWindow: Int = MaxResultWindow): (Int, Int) = {
     val (p, sz) = clamp(page, size, maxSize)
     require(p.toLong * sz <= maxWindow,
       s"result window too large: page $p x size $sz = ${p.toLong * sz} rows " +
         s"exceeds the $maxWindow-row offset-pagination window " +
         "(the index.max_result_window analog); deep scans should use " +
         "sort-keyed range pagination, not offsets")
-    val top = df.orderBy(orderBy: _*).limit(p * sz)
+    ((p - 1) * sz, p * sz)
+  }
+
+  /** `orderBy` must be a total order (add a unique tie-break column) or
+    * page boundaries are nondeterministic. Refuses what [[window]]
+    * refuses.
+    */
+  def paginate(df: DataFrame, orderBy: Seq[Column], page: Int, size: Int,
+      maxSize: Int = 100, maxWindow: Int = MaxResultWindow): DataFrame = {
+    val (from, until) = window(page, size, maxSize, maxWindow)
+    val top = df.orderBy(orderBy: _*).limit(until)
     top
       .withColumn("__rn", row_number().over(Window.orderBy(orderBy: _*)))
-      .filter(col("__rn") > (p - 1) * sz)
+      .filter(col("__rn") > from)
       .drop("__rn")
   }
 

@@ -74,7 +74,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 object Store {
 
   /** Internal hash-prefix partition column. */
-  private val PartCol = "graft_p"
+  private[graft] val PartCol = "graft_p"
 
   /** Internal generation partition column (commit epoch of the row). */
   private val GenCol = "graft_g"
@@ -102,9 +102,11 @@ object Store {
     * whose optimized plan is a LocalRelation under this many rows gets
     * its stats/routing computed in-process instead of via a Spark job.
     * Sized like [[graft.ops.Components.MaxLocalRootEdges]] — a bounded
-    * driver loop over data that is already driver-resident.
+    * driver loop over data that is already driver-resident. Also the
+    * row budget of the ranked `/search` hit lists an
+    * [[graft.api.Api.Service]] holds.
     */
-  private val MaxLocalStatsRows = 200000
+  private[graft] val MaxLocalStatsRows = 200000
 
   /** Byte budget for [[localized]]'s RETAINED driver copy (ADVICE r17):
     * the row cap alone is blind to row WIDTH — 200k rows of document
@@ -233,12 +235,6 @@ object Store {
     else df.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), df.schema)
   }
-
-  /** `df.count()`, read off the driver-resident rows when `df` is a
-    * [[localized]] copy under the cap (no job), counted by Spark otherwise.
-    */
-  private[graft] def rowCount(df: DataFrame): Long =
-    localRelationOf(df).map(_.data.length.toLong).getOrElse(df.count())
 
   /** Whether `df` is driver-resident (a LocalRelation under the local
     * cap) — what the streaming sinks branch on to skip `persist()`
@@ -1832,7 +1828,11 @@ object Store {
             FloatType | DoubleType | BooleanType | StringType => true
           case _ => false
         }
-        if (idIdx < 0 || partIdx < 0 || !hashSafe) return false
+        // a null id keeps the job path too: the orderings below read a
+        // null slot as 0 (or NPE on strings), where the job path sorts
+        // nulls first
+        if (idIdx < 0 || partIdx < 0 || !hashSafe ||
+            l.data.exists(_.isNullAt(idIdx))) return false
         val route = partEvaluator(kt, kt, buckets)
         // internal rows already hold the routing expression's input repr
         // (UTF8String for strings), and UTF8String's Comparable IS the
@@ -1880,6 +1880,35 @@ object Store {
       case None => false
     }
 
+  /** `shaped`'s bucketed files under `stageDir`, one `PartCol=p` dir per
+    * partition: written driver-side by [[directStageLocal]] where it
+    * applies, else by one job.
+    *
+    * Bucketed files WITHOUT the bucketed-table writer: an explicit-n
+    * `repartition(n, id)` is the bucket assignment function itself
+    * (HashPartitioning = pmod(murmur3(id), n), exactly what the scan's
+    * bucket pruning recomputes), and a REPARTITION_BY_NUM shuffle is
+    * never AQE-coalesced — so write-task index == bucket id, and the
+    * task-index prefix of each staged file names its bucket. The rename
+    * in [[stageBucketedGen]] tags the name with the `_NNNNN` suffix the
+    * bucketed scan parses. Within-task sort on (part, id) keeps the
+    * dynamic writer sort-free and the file contents id-ordered like the
+    * bucketed writer's.
+    */
+  private[graft] def stageWrite(
+      spark: SparkSession, shaped: DataFrame, idCol: String,
+      buckets: Int, stageDir: Path, fs: FileSystem): Unit =
+    graft.tools.DriverProf.time("store.stage.write") {
+      val direct = graft.tools.DriverProf.time("store.stage.write.direct")(
+        directStageLocal(spark, shaped, idCol, buckets, stageDir, fs))
+      if (!direct)
+        graft.tools.DriverProf.time("store.stage.write.job")(
+          shaped.repartition(buckets, col(idCol))
+            .sortWithinPartitions(col(PartCol), col(idCol))
+            .write.mode(SaveMode.Overwrite)
+            .partitionBy(PartCol).parquet(stageDir.toString))
+    }
+
   private def stageBucketedGen(
       spark: SparkSession, name: String, loc: Path, fs: FileSystem,
       shaped: DataFrame, gen: Long, touched: Seq[Int],
@@ -1887,26 +1916,7 @@ object Store {
     graft.tools.DriverProf.time("store.write.delta") {
       val stageDir = new Path(loc, s"_stage-$gen")
       if (fs.exists(stageDir)) fs.delete(stageDir, true)
-      // Bucketed files WITHOUT the bucketed-table writer: an explicit-n
-      // `repartition(n, id)` is the bucket assignment function itself
-      // (HashPartitioning = pmod(murmur3(id), n), exactly what the scan's
-      // bucket pruning recomputes), and a REPARTITION_BY_NUM shuffle is
-      // never AQE-coalesced — so write-task index == bucket id, and the
-      // task-index prefix of each staged file names its bucket. The
-      // rename below tags the name with the `_NNNNN` suffix the bucketed
-      // scan parses. Within-task sort on (part, id) keeps the dynamic
-      // writer sort-free and the file contents id-ordered like the
-      // bucketed writer's.
-      graft.tools.DriverProf.time("store.stage.write") {
-        val direct = graft.tools.DriverProf.time("store.stage.write.direct")(
-          directStageLocal(spark, shaped, idCol, tableBuckets, stageDir, fs))
-        if (!direct)
-          graft.tools.DriverProf.time("store.stage.write.job")(
-            shaped.repartition(tableBuckets, col(idCol))
-              .sortWithinPartitions(col(PartCol), col(idCol))
-              .write.mode(SaveMode.Overwrite)
-              .partitionBy(PartCol).parquet(stageDir.toString))
-      }
+      stageWrite(spark, shaped, idCol, tableBuckets, stageDir, fs)
       // a compaction fold can surface a partition whose surviving rows
       // are ALL tombstoned away — no staged dir then, and none needed:
       // the manifest points its live list at `gen`, which reads empty

@@ -65,11 +65,13 @@ object GraftLocalParquet {
     conf
   }
 
+  /** The session codec, resolved through Spark's own short-name table
+    * ([[ParquetOptions]]) as the distributed write resolves it.
+    */
   private def codecOf(spark: SparkSession): CompressionCodecName =
-    spark.sessionState.conf.parquetCompressionCodec.toLowerCase match {
-      case "none" | "uncompressed" => CompressionCodecName.UNCOMPRESSED
-      case other => CompressionCodecName.valueOf(other.toUpperCase)
-    }
+    CompressionCodecName.valueOf(
+      new ParquetOptions(Map.empty[String, String], spark.sessionState.conf)
+        .compressionCodecClassName)
 
   /** Write `rows` (already in the desired order) as ONE parquet file at
     * `path`, driver-side. `conf` must come from [[writeConf]] for the same

@@ -128,14 +128,131 @@ class ApiSpec extends SparkSpec {
     // connect materializes the served tables; a request reads that copy
     // instead of re-planning and re-scanning the source table
     val sc = spark.sparkContext
+    val s = withIndex // connected outside the counted windows
     val health = SpecBus.jobsDuring(sc) {
-      assert(withIndex.handle("GET", "/health").status === 200)
+      assert(s.handle("GET", "/health").status === 200)
     }
     val movie = SpecBus.jobsDuring(sc) {
-      assert(withIndex.handle("GET", "/movie/1").body("movieId") === 1)
+      assert(s.handle("GET", "/movie/1").body("movieId") === 1)
     }
     assert(health === 0, s"/health ran $health Spark jobs")
     assert(movie <= 1, s"/movie/1 ran $movie Spark jobs")
+  }
+
+  test("/health plans no query: a QueryExecutionListener sees 0 executions") {
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = { seen.incrementAndGet(); () }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = { seen.incrementAndGet(); () }
+    }
+    val s = withIndex
+    SpecBus.drain(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try {
+      assert(s.handle("GET", "/health").status === 200)
+      SpecBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    assert(seen.get === 0, s"/health ran ${seen.get} query executions")
+  }
+
+  private def search(s: Api.Service, q: String, page: String, size: String) =
+    s.handle("GET", "/search", params = Map("q" -> q, "page" -> page, "size" -> size))
+
+  test("/search serves a later page and a repeat of a ranked query with no Spark job") {
+    val sc = spark.sparkContext
+    val q = "the lion king"
+    val first = search(withIndex, q, "1", "10")
+    assert(first.status === 200)
+    val page2 = SpecBus.jobsDuring(sc)(assert(search(withIndex, q, "2", "10").status === 200))
+    // the held list is keyed by analyzed terms: case and blanks do not matter
+    var repeat: Api.Response = null
+    val again = SpecBus.jobsDuring(sc) { repeat = search(withIndex, " The LION king ", "1", "10") }
+    assert(page2 === 0, s"page 2 of a ranked query ran $page2 Spark jobs")
+    assert(again === 0, s"a repeat of page 1 ran $again Spark jobs")
+    assert(Api.Json.render(repeat.body) === Api.Json.render(first.body))
+  }
+
+  test("held-list /search pages are byte-equal to offset pagination over the hits") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, concat_ws}
+    val movies = MovieLens.movies(spark, MovieLensFixture.dir).cache()
+    val posting = graft.search.Posting.buildPosting(movies, "movieId",
+      Seq("title" -> col("title"), "genres" -> concat_ws(" ", col("genres")))).cache()
+    def doc(r: Row): Map[String, Any] = r.schema.fieldNames.map { f =>
+      f -> (r.get(r.fieldIndex(f)) match {
+        case xs: collection.Seq[_] => xs.toSeq
+        case x => x
+      })
+    }.toMap
+    try {
+      for (q <- Seq("the", "star wras")) {
+        val total = graft.search.Posting
+          .score(posting, Engine.terms(q), Seq("title" -> 3, "genres" -> 1)).count()
+        for (page <- 0 to 4; size <- Seq(0, 5, 10, 20, 150)) {
+          // the reference's clamps, then offset pagination of the scored hits
+          val (p, sz) = (math.max(1, page), if (size < 1 || size > 100) 10 else size)
+          val rows = Engine.searchViaPosting(movies, posting, q, p, sz).collect()
+          val expected = Map("movies" -> rows.toSeq.map(doc), "page" -> p, "size" -> sz,
+            "total" -> total)
+          val got = search(withIndex, q, page.toString, size.toString)
+          assert(got.status === 200)
+          assert(Api.Json.render(got.body) === Api.Json.render(expected),
+            s"'$q' page=$page size=$size diverged")
+        }
+      }
+    } finally { movies.unpersist(); posting.unpersist() }
+  }
+
+  test("/search past the 10,000-row offset window keeps the 500 envelope") {
+    assert(search(withIndex, "star", "101", "100") ===
+      Api.Response(500, Map("error" -> "Internal server error")))
+    assert(search(withIndex, "star", "100", "100").status === 200)
+  }
+
+  test("a 500 logs one WARN line naming the route and the exception") {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val s = withIndex
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("api-spec", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        lines.add(s"${e.getLevel} ${e.getMessage.getFormattedMessage}"); ()
+      }
+    }
+    appender.start()
+    val logger = LoggerContext.getContext(false).getLogger("graft.api.Api")
+    val level = logger.getLevel
+    logger.setLevel(org.apache.logging.log4j.Level.WARN)
+    logger.addAppender(appender)
+    try assert(search(s, "star", "101", "100").status === 500)
+    finally { logger.removeAppender(appender); logger.setLevel(level) }
+    val logged = lines.toArray.toSeq.map(_.toString)
+    assert(logged.size === 1, logged)
+    assert(logged.head.startsWith(
+      "WARN 500 on GET /search: java.lang.IllegalArgumentException: " +
+        "requirement failed: result window too large"), logged.head)
+  }
+
+  test("two requests racing on one new query serve identical bodies") {
+    val q = "godfather part"
+    val s = withIndex
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val bodies = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val threads = (1 to 2).map { _ =>
+      val t = new Thread(() => {
+        start.await()
+        bodies.add(Api.Json.render(search(s, q, "1", "5").body)); ()
+      })
+      t.start(); t
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    val bs = bodies.toArray.toSeq.map(_.toString)
+    assert(bs.size === 2 && bs.distinct.size === 1, bs)
+    assert(bs.head === Api.Json.render(search(s, q, "1", "5").body))
   }
 
   test("search pages are disjoint and sized like the reference's from/size math") {

@@ -97,6 +97,71 @@ class StoreSpec extends SparkSpec {
     }
   }
 
+  /** (partition dir/bucket prefix, rows in file order) for every parquet
+    * file [[Store.stageWrite]] left under `dir`.
+    */
+  private def stagedFiles(dir: java.nio.file.Path): Seq[(String, Seq[String])] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(dir).iterator.asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq
+      .map { f =>
+        s"${f.getParent.getFileName}/${f.getFileName.toString.take(10)}" ->
+          spark.read.parquet(f.toString).collect().map(_.toString).toSeq
+      }
+      .sortBy(_._1)
+  }
+
+  test("a null id stages through the job path: same files as the distributed frame") {
+    import spark.implicits._
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    def jobs(f: => Unit): Int = org.apache.spark.SpecBus.jobsDuring(spark.sparkContext)(f)
+    // one partition, one bucket: every row lands in one file, so the
+    // file's row order shows where the null id sorts
+    def stage(df: org.apache.spark.sql.DataFrame, idCol: String): (Seq[(String, Seq[String])], Int) = {
+      val dir = java.nio.file.Files.createTempDirectory("stage-null-id")
+      val n = jobs(Store.stageWrite(spark, df.withColumn(Store.PartCol, lit(0)), idCol,
+        1, new org.apache.hadoop.fs.Path(dir.toUri), fs))
+      (stagedFiles(dir), n)
+    }
+    val cases = Seq(
+      Seq(Some(-5L), None, Some(3L)).zipWithIndex.toDF("k", "v"),
+      Seq(Some("b"), None, Some("a")).zipWithIndex.toDF("k", "v"))
+    for (local <- cases) {
+      // the same frame without its null row stages driver-side
+      assert(stage(local.filter(col("k").isNotNull), "k")._2 === 0)
+      val (direct, _) = stage(local, "k")
+      val (job, _) = stage(local.localCheckpoint(), "k")
+      assert(direct === job, s"null-id staging diverged from the job path for ${local.schema("k")}")
+      assert(direct.head._2.head.startsWith("[null,"), "the job path sorts a null id first")
+    }
+  }
+
+  test("driver-side staging writes the session codec: lz4_raw") {
+    import spark.implicits._
+    val key = "spark.sql.parquet.compression.codec"
+    val prior = spark.conf.getOption(key)
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val dir = java.nio.file.Files.createTempDirectory("stage-codec")
+    spark.conf.set(key, "lz4_raw")
+    try {
+      val n = org.apache.spark.SpecBus.jobsDuring(spark.sparkContext) {
+        Store.stageWrite(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+          .withColumn(Store.PartCol, lit(0)), "k", 1, new org.apache.hadoop.fs.Path(dir.toUri), fs)
+      }
+      assert(n === 0, "the frame should have staged driver-side")
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val files = stagedFiles(dir)
+    assert(files.map(_._2) === Seq(Seq("[1,a]", "[2,b]")))
+    import scala.jdk.CollectionConverters._
+    val file = java.nio.file.Files.walk(dir).iterator.asScala.find(_.toString.endsWith(".parquet")).get
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.toUri), spark.sparkContext.hadoopConfiguration))
+    val codec = try reader.getFooter.getBlocks.get(0).getColumns.get(0).getCodec
+      finally reader.close()
+    assert(codec === org.apache.parquet.hadoop.metadata.CompressionCodecName.LZ4_RAW)
+  }
+
   test("upsert is incremental: untouched partitions stay byte-identical on disk") {
     import spark.implicits._
     // 1,000 keys across 16 hash partitions; then upsert 1% of them
