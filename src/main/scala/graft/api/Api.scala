@@ -120,18 +120,23 @@ object Api {
     * tables once and every request reads that copy instead of re-planning
     * a scan of the source table.
     *  - The movies table is held driver-resident ([[Store.localized]];
-    *    1,682 rows in MovieLens-100k, far under its caps), so a point
-    *    lookup or the availability probe runs no Spark job.
-    *  - The posting index is cached (`persist` plus one materializing
-    *    count). It stays distributed: a driver-resident copy would be
-    *    re-shipped to the executors by every `/search`.
+    *    1,682 rows in MovieLens-100k, far under its caps), and analyzed
+    *    once ([[Engine.snapshot]]): titles normalized, search fields
+    *    tokenized. `/movie`, `/recommend` and `/search` then answer on
+    *    the driver, with no Spark job or plan per request, under the
+    *    same scoring contracts as the Spark queries (EngineSpec pins
+    *    them equal).
+    *  - Only a snapshot past those caps stays distributed, and the
+    *    routes run their Spark queries. Then the posting index is loaded
+    *    and cached (`persist` plus one materializing count), and
+    *    `/search` ranks through it, or through the full scan without one.
     *  - The availability probe (`/health` and every guarded route)
     *    reads a flag `connect` sets from the held movies snapshot, so it
     *    plans no query.
     *  - `/search` ranks each distinct query once: the ranked hit list
-    *    ([[Engine.ranked]], at most [[graft.ops.Paging.MaxResultWindow]]
+    *    ([[Engine.Ranked]], at most [[graft.ops.Paging.MaxResultWindow]]
     *    rows plus the total) is held under the query's analyzed terms
-    *    ([[Engine.terms]]), which is all either scorer sees. Its first
+    *    ([[Engine.terms]]), which is all any scorer sees. Its first
     *    page, later pages and repeats are slices of that list and run no
     *    Spark job. The lists are bounded by
     *    [[graft.sources.Store.MaxLocalStatsRows]] held rows in all,
@@ -145,11 +150,12 @@ object Api {
     * @param sleep injected for tests (the reference sleeps 5 s between
     *              connection attempts)
     * @param loadPosting optional fuzzy-search posting index
-    *                    ([[graft.search.Posting]]); when present, /search
+    *                    ([[graft.search.Posting]]); loaded only for a
+    *                    snapshot past the local caps, where /search
     *                    scores via the candidate pre-gated index path —
     *                    the configuration a 100 TB corpus serves with —
-    *                    with an identical response envelope (ApiSpec pins
-    *                    the two routes byte-equal)
+    *                    with an identical response envelope (EngineSpec
+    *                    pins all three scorers' hits equal)
     */
   final class Service(
       loadMovies: () => DataFrame,
@@ -165,6 +171,10 @@ object Api {
       new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
     private val posting =
       new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
+    // the driver-resident snapshot every route reads; None past the
+    // localized caps, where the routes run Spark queries
+    private val snapshot =
+      new java.util.concurrent.atomic.AtomicReference[Option[Engine.Snapshot]](None)
     // the availability probe: set by connect after `movies`, read by
     // every guarded request
     @volatile private var up = false
@@ -183,7 +193,10 @@ object Api {
       while (attempt < maxRetries) {
         try {
           if (movies.get().isEmpty) movies.set(Some(Store.localized(loadMovies())))
-          if (posting.get().isEmpty) posting.set(loadPosting.map(l => cached(l())))
+          if (snapshot.get().isEmpty && Store.isLocalFrame(backend))
+            snapshot.set(Some(Engine.snapshot(backend)))
+          if (snapshot.get().isEmpty && posting.get().isEmpty)
+            posting.set(loadPosting.map(l => cached(l())))
           up = Engine.health(backend)
           if (up) return true
         } catch { case _: Exception => () }
@@ -259,7 +272,7 @@ object Api {
           b.get("title").map(_.toString).filter(_.nonEmpty) match {
             case None => err(400, "Title is required")
             case Some(title) =>
-              Engine.recommend(backend, title) match {
+              snapshot.get().fold(Engine.recommend(backend, title))(_.recommend(title)) match {
                 case Engine.NotFound(_) => err(404, "Movie not found")
                 case Engine.Disambiguation(cands) =>
                   Response(200, Map(
@@ -268,27 +281,29 @@ object Api {
                       Map("movieId" -> id, "title" -> t)
                     }))
                 case Engine.Recommendations((id, _), recs) =>
-                  val m = Engine.movieById(backend, id).collect().head
-                  Response(200, Map(
-                    "movie" -> doc(m),
-                    "recommendations" -> recs.collect().toSeq.map(doc)))
+                  recommended(Engine.movieById(backend, id).collect().head, recs.collect().toSeq)
+                case Engine.Recommended(m, recs) => recommended(m, recs)
               }
           }
       }
 
+    private def recommended(m: Row, recs: Seq[Row]): Response =
+      Response(200, Map("movie" -> doc(m), "recommendations" -> recs.map(doc)))
+
     private def movieRoute(id: String): Response =
       // the reference term-queries the raw string (api.py:168-178): a
       // non-numeric id simply matches nothing → the same 404
-      id.toIntOption.map(Engine.movieById(backend, _).collect()) match {
-        case Some(Array(row)) => Response(200, doc(row))
-        case _                => err(404, "Movie not found")
+      id.toIntOption.flatMap(i => snapshot.get()
+        .fold(Engine.movieById(backend, i).collect().headOption)(_.movie(i))) match {
+        case Some(row) => Response(200, doc(row))
+        case None      => err(404, "Movie not found")
       }
 
     /** The query's held ranked list, ranked now on a miss. */
     private def rankedHits(q: String): Engine.Ranked = {
       val key = Engine.terms(q)
-      held.get(key).getOrElse(
-        held.putIfAbsent(key, Engine.ranked(backend, q, posting.get())))
+      held.get(key).getOrElse(held.putIfAbsent(key,
+        snapshot.get().fold(Engine.ranked(backend, q, posting.get()))(_.ranked(q))))
     }
 
     private def searchRoute(params: Map[String, String]): Response =

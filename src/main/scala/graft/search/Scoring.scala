@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Analyzer: deterministic text normalization/tokenization shared by every
   * search operator — the engine's stand-in for the reference's ES `standard`
@@ -38,6 +39,12 @@ object Scoring {
   def phraseMatch(field: Column, phrase: String): Column =
     Analyzer.normalize(field).contains(phrase.toLowerCase.trim)
 
+  /** Driver-side twin of [[phraseMatch]] over a field already normalized
+    * by [[Analyzer.normalize]] (null: no match).
+    */
+  def phraseMatchOf(normalized: UTF8String, phrase: String): Boolean =
+    normalized != null && normalized.contains(UTF8String.fromString(phrase.toLowerCase.trim))
+
   /** Q5 `bool should`: number of query terms contained in the field
     * (normalized). `minimum_should_match` is a `>= n` filter on this.
     */
@@ -45,6 +52,11 @@ object Scoring {
     terms
       .map(t => when(Analyzer.normalize(field).contains(t.toLowerCase), 1).otherwise(0))
       .reduce(_ + _)
+
+  /** Driver-side twin of [[shouldMatchCount]] over a normalized field. */
+  def shouldMatchCountOf(normalized: UTF8String, terms: Seq[String]): Int =
+    if (normalized == null) 0
+    else terms.count(t => normalized.contains(UTF8String.fromString(t.toLowerCase)))
 
   /** Q7 `multi_match` with per-field boosts: Σ_fields boost_f × matches_f. */
   def multiMatch(terms: Seq[String], fields: Seq[(Column, Int)]): Column =
@@ -85,7 +97,21 @@ object Scoring {
       }.reduce(_ + _)
     }.reduce(_ + _)
 
+  /** Driver-side twin of the token test inside [[fuzzyMultiMatch]]: a
+    * token within `term`'s AUTO budget, with the same equality at budget 0
+    * and the same thresholded levenshtein kernel Spark's `levenshtein`
+    * calls. `term` is already lowercased.
+    */
+  def withinAutoFuzzOf(token: UTF8String, term: UTF8String, budget: Int): Boolean =
+    if (budget <= 0) token == term else token.levenshteinDistance(term, budget) != -1
+
   /** Q3 genre-overlap relevance: |field ∩ queryTerms| (array column form). */
   def overlapScore(field: Column, queryTerms: Seq[String]): Column =
     size(array_intersect(field, array(queryTerms.map(lit(_)): _*)))
+
+  /** Driver-side twin of [[overlapScore]]: the distinct field elements
+    * among the query terms (a null field never scores).
+    */
+  def overlapScoreOf(field: Seq[String], queryTerms: Seq[String]): Int =
+    if (field == null) 0 else field.distinct.count(queryTerms.contains)
 }

@@ -174,6 +174,22 @@ class ApiSpec extends SparkSpec {
     assert(Api.Json.render(repeat.body) === Api.Json.render(first.body))
   }
 
+  test("on the driver-resident snapshot no route runs a Spark job, a first-seen /search included") {
+    val s = withIndex // connected outside the counted windows
+    val sc = spark.sparkContext
+    var r: Api.Response = null
+    val searchJobs = SpecBus.jobsDuring(sc) { r = search(s, "jurasic park", "1", "10") }
+    assert(r.status === 200 && r.body("total").asInstanceOf[Long] > 0, r)
+    val movieJobs = SpecBus.jobsDuring(sc) { r = s.handle("GET", "/movie/50") }
+    assert(r.status === 200, r)
+    val recJobs = SpecBus.jobsDuring(sc) {
+      r = s.handle("POST", "/recommend", body = Some(Map("title" -> "Toy Story (1995)")))
+    }
+    assert(r.status === 200 && r.body.contains("recommendations"), r)
+    assert((searchJobs, movieJobs, recJobs) === ((0, 0, 0)),
+      "Spark jobs per /search, /movie, /recommend")
+  }
+
   test("held-list /search pages are byte-equal to offset pagination over the hits") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions.{col, concat_ws}

@@ -96,6 +96,55 @@ class EngineSpec extends SparkSpec {
     assert(zeroTotal === 0L && emptyPage.collect().isEmpty)
   }
 
+  test("a driver-resident Snapshot ranks every query as the scan and the posting scorers do") {
+    val posting = graft.search.Posting.buildPosting(movies, "movieId",
+      Seq("title" -> col("title"), "genres" -> concat_ws(" ", col("genres")))).cache()
+    val snap = Engine.snapshot(graft.sources.Store.localized(movies))
+    // typos inside and past the AUTO budgets, repeated and multi-field
+    // terms, punctuation, non-ASCII titles, blanks and misses
+    val queries = Seq("star wras", "stra wars", "toy", "zzzzqq", "western western",
+      "the", "a", "love story", "godfather part", "  The LION king ", "crimpe",
+      "camdyman", "robocop western", "film-noir", "sci-fi", "children's",
+      "misérables", "MISÉRABLES", "(1995)", "1995", "x y z", "ab", "",
+      "comedy drama romance", "l'amour")
+    try {
+      for (q <- queries) {
+        def hits(r: Engine.Ranked) = (r.total, r.rows.map(_.toSeq))
+        val scan = hits(Engine.ranked(movies, q))
+        assert(hits(snap.ranked(q)) === scan, s"snapshot diverged from the scan for '$q'")
+        assert(hits(Engine.ranked(movies, q, Some(posting))) === scan,
+          s"posting diverged from the scan for '$q'")
+      }
+      assert(snap.ranked("toy").rows.head.schema.fieldNames.toSeq ===
+        Engine.ranked(movies, "toy").schema.fieldNames.toSeq)
+    } finally { posting.unpersist(); () }
+  }
+
+  test("a driver-resident Snapshot answers /movie and /recommend as the Spark queries do") {
+    val snap = Engine.snapshot(graft.sources.Store.localized(movies))
+    for (id <- Seq(1, 2, 267, 1373, 1682, 0, -5, 99999)) {
+      assert(snap.movie(id).map(_.toSeq) ===
+        Engine.movieById(movies, id).collect().headOption.map(_.toSeq), s"movie $id")
+    }
+    // unique titles (genre-less ones take the keyword fallback), every
+    // 60th title of the table, ambiguous phrases, misses and blanks
+    val titles = Seq("Toy Story (1995)", "Good Morning (1971)", "star", "the", "love",
+      "godfather", "misérables", "MISÉRABLES", "No Such Movie Ever", " ", "(1995)") ++
+      movies.orderBy("movieId").select("title").collect()
+        .map(_.getString(0)).grouped(60).map(_.head)
+    for (t <- titles) {
+      (snap.recommend(t), Engine.recommend(movies, t)) match {
+        case (Engine.Recommended(m, recs), Engine.Recommendations((id, title), expected)) =>
+          assert((m.getAs[Int]("movieId"), m.getAs[String]("title")) === ((id, title)), t)
+          assert(m.toSeq === Engine.movieById(movies, id).collect().head.toSeq, t)
+          assert(recs.map(_.toSeq) === expected.collect().toSeq.map(_.toSeq),
+            s"recommendations for '$t'")
+          assert(recs.forall(_.schema.fieldNames.toSeq == expected.columns.toSeq), t)
+        case (got, expected) => assert(got === expected, t)
+      }
+    }
+  }
+
   test("health: table reachable") {
     assert(Engine.health(movies))
   }
