@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.SparkEvents
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Benchmark main: per query, three timed runs with the cache cleared
   * after every run (queries that persist internally — q24/q26/q29 — would
   * otherwise accumulate cached partitions across the whole battery and
@@ -10,54 +14,6 @@ package graft
   * visible instead of read as regression. Single-line JSON on stdout.
   */
 object Bench {
-
-  /** Drift-immune plan metrics (VERDICT r7 wrong #4): wall time on a
-    * shared host is load-dominated for many-job queries — r7's 2.8×
-    * "regression" was pure scheduling drift and cost a control experiment
-    * to dismiss. Job/stage/task counts and shuffle bytes are pure
-    * functions of the plan and the data, so they survive host drift and
-    * give the real cross-round regression signal. Stage-completion
-    * `taskMetrics` carries the per-stage totals; no per-task events
-    * needed.
-    */
-  private[graft] final class MetricsListener extends org.apache.spark.scheduler.SparkListener {
-    import java.util.concurrent.atomic.AtomicLong
-    val jobs = new AtomicLong; val stages = new AtomicLong; val tasks = new AtomicLong
-    val shuffleRead = new AtomicLong; val shuffleWrite = new AtomicLong
-    override def onJobStart(
-        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet(); ()
-    }
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      stages.incrementAndGet()
-      tasks.addAndGet(sc.stageInfo.numTasks.toLong)
-      val tm = sc.stageInfo.taskMetrics
-      if (tm != null) {
-        shuffleRead.addAndGet(tm.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(tm.shuffleWriteMetrics.bytesWritten)
-      }
-      ()
-    }
-    def snap: Seq[Long] =
-      Seq(jobs.get, stages.get, tasks.get, shuffleRead.get, shuffleWrite.get)
-    /** The listener bus is async: poll until the counters hold still so a
-      * snapshot never splits a query's trailing events into the next
-      * query's delta.
-      */
-    def quiesce(): Seq[Long] = {
-      var prev = snap
-      var stable = 0
-      var polls = 0
-      while (stable < 2 && polls < 40) {
-        Thread.sleep(50)
-        val cur = snap
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        polls += 1
-      }
-      prev
-    }
-  }
 
   /** The host's 1/5/15-min load averages — recorded at battery start and
     * end (r20, VERDICT r19 #9): a contended half-hour turns medians into
@@ -70,6 +26,62 @@ object Bench {
       .split("\\s+").take(3).map(_.toDouble).toSeq
     catch { case _: Exception => Seq.empty }
 
+  /** The timed action is a NOOP SINK, not count(): count() lets Catalyst
+    * eliminate exactly the work some queries exist to measure — a left
+    * join onto a distinct key (q114's keeper labeling) and the final
+    * top-k sort both prune under count, which timed q114 at 0.26 s while
+    * the correctness gate evaluated the real thing. The noop sink
+    * consumes every output row and column, so the timed region covers
+    * the full query (standard Spark bench practice). r8+ walls are
+    * therefore not comparable to r7-'s count()-based walls — plan
+    * metrics are the cross-round signal anyway.
+    */
+  private[graft] def once(
+      spark: SparkSession, sfDir: String, fn: (SparkSession, String) => DataFrame)
+      : Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Right((System.nanoTime() - t0) / 1e9)
+    }
+    catch { case e: Throwable => Left(Option(e.getMessage).getOrElse(e.getClass.getName)) }
+    finally release(spark) // outside the timed region the next run starts from
+  }
+
+  /** Drops everything a run left cached, so every run starts cold.
+    * clearCache releases SQL-cached plans only — RDDs persisted by MLlib
+    * internals (KMeans/ALS fits inside the ANN/clustering battery)
+    * accumulate in the block manager across the whole run and inflate
+    * LATER queries' per-job cost (r15: q120 measured 17.6 s in the r13
+    * battery, 67.8 s in the r15 battery, ~20 s standalone — identical
+    * plans; the alphabetically-earlier KMeans-backed queries were the
+    * difference).
+    */
+  private[graft] def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.valuesIterator.foreach(_.unpersist(false))
+  }
+
+  /** One query's per-layer record: JVM GC ms, Janino compile ms and each
+    * driver span's (calls, nanos) delta.
+    */
+  private final case class Layers(gcMs: Long, codegenMs: Double, spans: Map[String, (Long, Long)]) {
+    def json: String = {
+      val sp = spans.toSeq.sortBy(_._1).map { case (k, (n, ns)) =>
+        s""""$k":{"calls":$n,"ms":${r3(ns / 1e6)}}"""
+      }.mkString("{", ",", "}")
+      s"""{"gc_ms":$gcMs,"codegen_ms":${r3(codegenMs)},"spans":$sp}"""
+    }
+  }
+
+  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
+
+  private def gcMillis: Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime).sum
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = loadAvg
@@ -77,8 +89,6 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = new MetricsListener
-    spark.sparkContext.addSparkListener(metrics)
 
     // Dev-loop filter (mirrors Verify's SPARK_GRAFT_ONLY): comma-separated
     // name prefixes; unset → the full battery the driver runs.
@@ -86,37 +96,6 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.forall(_.exists(q._1.startsWith)))
-    // The timed action is a NOOP SINK, not count(): count() lets Catalyst
-    // eliminate exactly the work some queries exist to measure — a left
-    // join onto a distinct key (q114's keeper labeling) and the final
-    // top-k sort both prune under count, which timed q114 at 0.26 s while
-    // the correctness gate evaluated the real thing. The noop sink
-    // consumes every output row and column, so the timed region covers
-    // the full query (standard Spark bench practice). r8+ walls are
-    // therefore not comparable to r7-'s count()-based walls — plan
-    // metrics are the cross-round signal anyway.
-    def once(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Either[String, Double] = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Right((System.nanoTime() - t0) / 1e9)
-      }
-      catch { case e: Throwable => Left(Option(e.getMessage).getOrElse(e.getClass.getName)) }
-      finally {
-        // outside the timed region the next run starts from
-        spark.catalog.clearCache()
-        // clearCache releases SQL-cached plans only — RDDs persisted by
-        // MLlib internals (KMeans/ALS fits inside the ANN/clustering
-        // battery) accumulate in the block manager across the whole run
-        // and inflate LATER queries' per-job cost (r15: q120 measured
-        // 17.6 s in the r13 battery, 67.8 s in the r15 battery, ~20 s
-        // standalone — identical plans; the alphabetically-earlier
-        // KMeans-backed queries were the difference)
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(false))
-      }
-    }
 
     // UNTIMED warmups before the battery: the first query otherwise
     // absorbs executor spin-up + first-codegen costs in its spread (r4
@@ -129,125 +108,68 @@ object Bench {
       "q38_ann_ivf_topk", "q58_ml_rec_serving",
       "q67_ml_search_posting", "q68_ann_recall_clustered",
       "q117_ann_ivf_rebuild", "q118_ann_ivf_rebuild_quantized")
-    (qs.take(1) ++ qs.filter(q => offlineBacked(q._1))).foreach(q => once(q._2))
+    (qs.take(1) ++ qs.filter(q => offlineBacked(q._1))).foreach(q => once(spark, sfDir, q._2))
 
-    // Dev-only battery-position diagnostics (SPARK_GRAFT_BENCH_DIAG=1,
-    // VERDICT r15 #3): per query, the JVM-state deltas that could explain
-    // a many-job query timing +35% in the 204-query battery vs standalone
-    // with byte-identical plan metrics — GC time (heap-pressure
-    // hypothesis), post-gc live heap (what's accumulating), Janino
-    // compile count/time (codegen-cache-eviction hypothesis), and
-    // shuffle-dir file count (disk-bookkeeping hypothesis). stderr only;
-    // the driver's JSON is untouched.
-    val diag = sys.env.get("SPARK_GRAFT_BENCH_DIAG").contains("1")
-    def gcMillis: Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    def compileCount: Long =
-      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    // JIT/class pools: thousands of Janino classes over a 204-query
-    // battery can saturate the JIT code cache (the sweeper then evicts
-    // hot methods → re-JIT or interpreted stretches) or balloon
-    // metaspace — both slow MANY-JOB queries most while leaving plans
-    // byte-identical, which is exactly the q120 signature.
-    def poolMb(prefix: String): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getName.startsWith(prefix))
-        .map(_.getUsage.getUsed).sum / 1048576
-    }
-    def loadedClasses: Long =
-      java.lang.management.ManagementFactory.getClassLoadingMXBean.getLoadedClassCount.toLong
-    def jitMillis: Long =
-      java.lang.management.ManagementFactory.getCompilationMXBean.getTotalCompilationTime
-    // THIS JVM's block-manager dirs only (creation time >= JVM start):
-    // java.io.tmpdir is shared, so an unscoped blockmgr-* walk would
-    // count a concurrent Spark app's (or a crashed prior run's) dirs
-    // into the trend the diagnostic exists to read (code review r16).
-    val jvmStartMs =
-      java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
-    def shuffleFiles: Long =
-      if (!diag) 0L
-      else {
-        val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-        val dirs = Option(tmp.listFiles()).getOrElse(Array.empty)
-          .filter { f =>
-            f.isDirectory && f.getName.startsWith("blockmgr-") && (try {
-              java.nio.file.Files.readAttributes(f.toPath,
-                  classOf[java.nio.file.attribute.BasicFileAttributes])
-                .creationTime().toMillis >= jvmStartMs
-            } catch { case _: Exception => false })
-          }
-        def walk(f: java.io.File): Long =
-          if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-          else 1L
-        dirs.map(walk).sum
-      }
-
+    // Per query, the LAST rep is bracketed (steady state: caches and
+    // offline artifacts warm), so each record is one clean execution:
+    // - plan metrics (VERDICT r7 wrong #4): wall time on a shared host is
+    //   load-dominated for many-job queries, while job/stage/task counts
+    //   and shuffle bytes are pure functions of the plan and the data, so
+    //   they give the cross-round regression signal;
+    // - layers: JVM GC time, Janino compile time and the driver spans
+    //   (DriverProf), which say where a wall went that the plan metrics
+    //   cannot (heap pressure, codegen-cache misses, catalog and manifest
+    //   round-trips).
     val results = qs.map { case (name, fn) =>
-      // plan metrics bracket the LAST rep only (steady state: caches and
-      // offline artifacts warm), so the delta is one clean execution
-      val gc0 = if (diag) gcMillis else 0L
-      val cc0 = if (diag) compileCount else 0L
-      val head = (1 to reps - 1).map(_ => once(fn))
-      val before = metrics.quiesce()
-      val lastRun = once(fn)
-      val after = metrics.quiesce()
-      val runs = head :+ lastRun
-      val delta = after.zip(before).map { case (a, b) => a - b }
+      val head = (1 to reps - 1).map(_ => once(spark, sfDir, fn))
+      val gc0 = gcMillis
+      val cg0 = CodeGenerator.compileTime
+      val spans0 = graft.tools.DriverProf.snapshot()
+      var lastRun: Either[String, Double] = Left("?")
+      val counts = SparkEvents.during(spark.sparkContext) { lastRun = once(spark, sfDir, fn) }
+      val layers = Layers(gcMillis - gc0, (CodeGenerator.compileTime - cg0) / 1e6,
+        graft.tools.DriverProf.since(spans0))
       System.gc() // keep one query's garbage out of the next query's timing
-      if (diag) {
-        val rt = Runtime.getRuntime
-        System.err.println(
-          s"[diag] $name gc_ms=${gcMillis - gc0} " +
-            s"heap_post_gc_mb=${(rt.totalMemory - rt.freeMemory) / 1048576} " +
-            s"codegen_compiles=${compileCount - cc0} " +
-            s"jit_total_ms=$jitMillis " +
-            s"codecache_mb=${poolMb("CodeHeap")} " +
-            s"metaspace_mb=${poolMb("Metaspace")} " +
-            s"classes=$loadedClasses " +
-            s"shuffle_files=$shuffleFiles")
-      }
+      val runs = head :+ lastRun
       val times = runs.collect { case Right(s) => s }.sorted
       val outcome =
         if (times.isEmpty) Left(runs.collectFirst { case Left(m) => m }.getOrElse("?"))
         else Right((times(times.size / 2), times.last - times.head))
-      (name, outcome, delta)
+      (name, outcome, counts, layers)
     }
 
-    def r3(x: Double): Double = math.rint(x * 1000) / 1000
     val timings = results.map {
-      case (k, Right((med, _)), _) => s""""$k":${r3(med)}"""
-      case (k, Left(_), _)         => s""""$k":-1"""
+      case (k, Right((med, _)), _, _) => s""""$k":${r3(med)}"""
+      case (k, Left(_), _, _)         => s""""$k":-1"""
     }.mkString("{", ",", "}")
-    val spreads = results.collect { case (k, Right((_, sp)), _) =>
+    val spreads = results.collect { case (k, Right((_, sp)), _, _) =>
       s""""$k":${math.rint(sp * 1000) / 1000}"""
     }.mkString("{", ",", "}")
-    val errs = results.collect { case (k, Left(msg), _) =>
+    val errs = results.collect { case (k, Left(msg), _, _) =>
       s""""$k":"${msg.replaceAll("[\\x00-\\x1f\"\\\\]", " ").take(120)}""""
     }.mkString("{", ",", "}")
-    val planMetrics = results.collect { case (k, Right(_), Seq(j, st, t, sr, sw)) =>
-      s""""$k":{"jobs":$j,"stages":$st,"tasks":$t,"shuffle_read":$sr,"shuffle_write":$sw}"""
+    val planMetrics = results.collect { case (k, Right(_), c, _) =>
+      s""""$k":{"jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},""" +
+        s""""shuffle_read":${c.shuffleRead},"shuffle_write":${c.shuffleWrite}}"""
     }.mkString("{", ",", "}")
-    val total = results.collect { case (_, Right((med, _)), _) => med }.sum
+    val layers = results.map { case (k, _, _, l) => s""""$k":${l.json}""" }.mkString("{", ",", "}")
+    val total = results.collect { case (_, Right((med, _)), _, _) => med }.sum
     // red flag (r20, VERDICT r19 #9): a spread larger than the median
     // means one rep was at least 2× another — that median proves nothing
     // about the code; name the suspects so a regression read can discount
     // them instead of mistaking host noise for a plan problem
     val suspects = results.collect {
-      case (k, Right((med, sp)), _) if sp > med && med > 0.5 => k
+      case (k, Right((med, sp)), _, _) if sp > med && med > 0.5 => k
     }
     val loadEnd = loadAvg
     def jarr(xs: Seq[Double]) = xs.mkString("[", ",", "]")
     val suspectsJson = suspects.map(k => s""""$k"""").mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$timings,"spread_sec":$spreads,"plan_metrics":$planMetrics,"errors":$errs,"spread_suspects":$suspectsJson,"loadavg_start":${jarr(loadStart)},"loadavg_end":${jarr(loadEnd)},"reps":$reps,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$timings,"spread_sec":$spreads,"plan_metrics":$planMetrics,"layers":$layers,"errors":$errs,"spread_suspects":$suspectsJson,"loadavg_start":${jarr(loadStart)},"loadavg_end":${jarr(loadEnd)},"reps":$reps,"sf":"$sfDir"}"""
     // Durable copy: the driver preserves only a stdout TAIL (2000 chars —
     // BENCH_r16/r17 both recorded "parsed": null because the full line is
     // ~50 KB and gets cut mid-line). The full JSON (queries + spreads +
-    // plan_metrics) lands ONLY in this file; stdout carries a compact
+    // plan_metrics + layers) lands ONLY in this file; stdout carries a compact
     // summary that fits the tail (VERDICT r17 nit #1).
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_last.json")
     try {
@@ -263,14 +185,13 @@ object Bench {
     // "[success]" line costs ~75 of those). Printed after spark.stop() so
     // no late executor chatter can land between it and process exit.
     val slowest = results
-      .collect { case (k, Right((med, _)), _) => (k, med) }
+      .collect { case (k, Right((med, _)), _, _) => (k, med) }
       .sortBy(-_._2).take(20)
       .map { case (k, med) => s""""$k":${r3(med)}""" }
       .mkString("{", ",", "}")
     val errCount = results.count(_._2.isLeft)
     val compact =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"errors_count":$errCount,"queries":$slowest,"queries_truncated":true,"queries_file":"$outFile","n_spread_suspects":${suspects.size},"loadavg_start":${jarr(loadStart)},"loadavg_end":${jarr(loadEnd)},"reps":$reps,"sf":"$sfDir"}"""
-    graft.tools.DriverProf.dump() // no-op unless SPARK_GRAFT_PROF=1
     spark.stop()
     println(compact)
     if (results.exists(_._2.isLeft)) sys.exit(1)

@@ -29,24 +29,18 @@ object EventOps {
     // sketch rows — hundreds of rows), so >1 post-shuffle partition buys
     // nothing at ANY cluster size while multiplying per-trigger tasks and
     // scheduler round-trips; this is exactly the coalesce-to-one AQE would
-    // pick if it ran here (it is off below, measured cheaper). Same-session
-    // A/B on q201/q226/q219 at 8 vs 1: 100.1 s → 49.8 s, identical
-    // results. A production stream with genuinely large micro-batches
-    // overrides via SPARK_GRAFT_STREAM_SHUFFLE — the scale knob stays a
-    // parameter, not a constant baked into operator code.
-    // r20 A/B hook: SPARK_GRAFT_STREAM_SHUFFLE=aqe runs the clone with
-    // AQE coalescing instead of a fixed width (the VERDICT r19 #4
-    // alternative) — everything else below still applies
-    val streamShuffle = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "1")
-    if (streamShuffle != "aqe")
-      ss.conf.set("spark.sql.shuffle.partitions", streamShuffle)
+    // pick if it ran here (it is off below). Same-session A/B on
+    // q201/q226/q219 at 8 vs 1: 100.1 s → 49.8 s, identical results. A
+    // stream with genuinely large micro-batches needs a wider child
+    // session — a change that wants its own A/B.
+    ss.conf.set("spark.sql.shuffle.partitions", "1")
     // the banded signature indexes carry O(nBands × nBuckets) partition
     // dirs; above the default threshold (32) EVERY per-trigger probe read
     // launches a parallel file-listing JOB whose task count is the dir
     // count — at micro-batch scale that listing is pure overhead (local
     // FS, ~100 dirs list in ms driver-side). A real cluster with
     // thousands of dirs wants the parallel listing back — this is the
-    // micro-batch child session only, like the AQE toggle above.
+    // micro-batch child session only, like the AQE setting below.
     ss.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     // AQE re-plans per materialized exchange, which on a MICRO-BATCH means
     // several extra scheduler round-trips per trigger for row counts in
@@ -54,8 +48,7 @@ object EventOps {
     // at identical results (batch sizing here is static and tiny; AQE's
     // wins — coalescing, skew splits — need real data volume). The batch
     // engine keeps AQE on; this is the streaming child session only.
-    ss.conf.set("spark.sql.adaptive.enabled",
-      if (streamShuffle == "aqe") "true" else "false")
+    ss.conf.set("spark.sql.adaptive.enabled", "false")
     ss
   }
 

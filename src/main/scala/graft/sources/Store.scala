@@ -216,21 +216,8 @@ object Store {
     // optimization (measured as a per-consumer driver-side re-derivation
     // of the whole signature pass in the q202 sink). The copy into a
     // fresh LocalRelation IS the materialization contract.
-    // caller-attributed label under SPARK_GRAFT_PROF (dev-only): the
-    // aggregate "localized.collect" number can't say WHICH frame is slow
-    val label =
-      if (!graft.tools.DriverProf.on) "store.localized.collect"
-      else {
-        val site = Thread.currentThread.getStackTrace
-          .find { e =>
-            val c = e.getClassName
-            c.startsWith("graft.") && !c.contains("Store") && !c.contains("DriverProf")
-          }
-          .map(e => s"${e.getClassName.split('.').last}:${e.getLineNumber}")
-          .getOrElse("?")
-        s"store.localized.collect@$site"
-      }
-    val rows = graft.tools.DriverProf.time(label)(df.limit(cap + 1).collect())
+    val rows = graft.tools.DriverProf.time("store.localized.collect")(
+      df.limit(cap + 1).collect())
     if (rows.length > cap || approxLocalBytes(rows) > maxBytes) df.localCheckpoint()
     else df.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), df.schema)

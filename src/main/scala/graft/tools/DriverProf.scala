@@ -1,16 +1,14 @@
 package graft.tools
 
-/** Env-gated (`SPARK_GRAFT_PROF=1`) driver-side phase profiler: a static
-  * label → (calls, nanos) accumulator with zero overhead when off. The
-  * per-trigger residual in the composed streaming sinks is DRIVER time
-  * (catalog round-trips, manifest IO, plan analysis — the q120 profile),
-  * which wall-clock A/Bs on a drifting host can't attribute; this
-  * instrument says exactly which fixed cost each trigger pays, so the
-  * optimization work targets the measured term instead of a hypothesis.
-  * Dev-only: nothing in the gate or bench paths reads it.
+/** Driver-side span profiler: a static label → (calls, nanos) accumulator,
+  * always on. The per-trigger residual in the composed streaming sinks is
+  * DRIVER time (catalog round-trips, manifest IO, plan analysis — the q120
+  * profile), which wall-clock A/Bs on a drifting host can't attribute;
+  * these spans say exactly which fixed cost each trigger pays. Bench
+  * records each query's span deltas in its `layers` record. A span costs
+  * two `nanoTime` reads, one map lookup and two atomic adds.
   */
 object DriverProf {
-  val on: Boolean = sys.env.get("SPARK_GRAFT_PROF").contains("1")
 
   private final class Cell {
     val calls = new java.util.concurrent.atomic.AtomicLong
@@ -19,31 +17,30 @@ object DriverProf {
   private val acc =
     new java.util.concurrent.ConcurrentHashMap[String, Cell]
 
-  @inline def time[T](label: String)(f: => T): T =
-    if (!on) f
-    else {
-      val t0 = System.nanoTime()
-      try f
-      finally {
-        val c = acc.computeIfAbsent(label, _ => new Cell)
-        c.calls.incrementAndGet()
-        c.nanos.addAndGet(System.nanoTime() - t0)
-        ()
-      }
-    }
-
-  /** stderr table, most expensive first; resets nothing. */
-  def dump(tag: String = ""): Unit = if (on) {
-    import scala.jdk.CollectionConverters._
-    val rows = acc.asScala.toSeq
-      .map { case (k, c) => (k, c.calls.get, c.nanos.get / 1e6) }
-      .sortBy(-_._3)
-    System.err.println(s"[prof$tag] ${"label".padTo(40, ' ')} calls  total_ms  ms/call")
-    rows.foreach { case (k, n, ms) =>
-      System.err.println(
-        f"[prof$tag] ${k.padTo(40, ' ')} $n%5d  $ms%8.1f  ${ms / math.max(1, n)}%7.2f")
+  @inline def time[T](label: String)(f: => T): T = {
+    val t0 = System.nanoTime()
+    try f
+    finally {
+      val hit = acc.get(label)
+      val c = if (hit != null) hit else acc.computeIfAbsent(label, _ => new Cell)
+      c.calls.incrementAndGet()
+      c.nanos.addAndGet(System.nanoTime() - t0)
+      ()
     }
   }
 
-  def reset(): Unit = acc.clear()
+  /** Every label's (calls, nanos) so far. */
+  def snapshot(): Map[String, (Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    acc.asScala.iterator.map { case (k, c) => k -> ((c.calls.get, c.nanos.get)) }.toMap
+  }
+
+  /** The (calls, nanos) each label accrued since `before`; labels with no
+    * new calls are left out.
+    */
+  def since(before: Map[String, (Long, Long)]): Map[String, (Long, Long)] =
+    snapshot().flatMap { case (k, (n, ns)) =>
+      val (n0, ns0) = before.getOrElse(k, (0L, 0L))
+      if (n > n0) Some(k -> ((n - n0, ns - ns0))) else None
+    }
 }

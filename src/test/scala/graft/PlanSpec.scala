@@ -418,11 +418,11 @@ class PlanSpec extends SparkSpec {
     // near-the-end resume run the SAME number of Spark jobs — no term
     // in the plan grows with cursor depth
     def jobsOf(last: Seq[Any]): Int =
-      org.apache.spark.SpecBus.jobsDuring(spark.sparkContext) {
+      org.apache.spark.SparkEvents.during(spark.sparkContext) {
         Paging.searchAfter(Tables.orders(spark, dir),
           Seq(("o_orderkey", true)), Some(last), 10).collect()
         ()
-      }
+      }.jobs
     val shallow = jobsOf(Seq(5L))
     val deep = jobsOf(Seq(5900000L)) // near the key-space end at sf0.001
     assert(shallow == deep,
@@ -477,26 +477,15 @@ class PlanSpec extends SparkSpec {
     // construction time: a full extra corpus scan per run. The cap is now a
     // 1-row broadcast scalar subquery INSIDE the query plan, so merely
     // building the DataFrame must not touch the cluster.
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        // spark.read.parquet runs a 1-footer schema-inference job per read
-        // call — IO setup, not the corpus pass this pin forbids
-        if (!js.stageInfos.forall(_.name.startsWith("parquet at")))
-          jobs.add(s"job=${js.jobId} stages=" + js.stageInfos.map(_.name).mkString(";"))
-        ()
-      }
-    }
-    // keep earlier tests' queued events out of the window
-    org.apache.spark.SpecBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      SparkEntry.queries("q24_ngram_jaccard_pairs")(spark, sf("sf0.001"))
-      org.apache.spark.SpecBus.drain(spark.sparkContext)
-      assert(jobs.isEmpty,
-        s"query construction submitted Spark job(s) — driver-side pass is back: $jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val started = org.apache.spark.SparkEvents.during(spark.sparkContext) {
+      SparkEntry.queries("q24_ngram_jaccard_pairs")(spark, sf("sf0.001")); ()
+    }.jobStages.map(_.map(_._1))
+    // spark.read.parquet runs a 1-footer schema-inference job per read
+    // call — IO setup, not the corpus pass this pin forbids
+    val jobs = started.filterNot(_.forall(_.startsWith("parquet at")))
+      .map(stages => "stages=" + stages.mkString(";"))
+    assert(jobs.isEmpty,
+      s"query construction submitted Spark job(s) — driver-side pass is back: $jobs")
   }
 
   test("quantized ivfQuery reads the int8 code column, never the float vector") {

@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.SpecBus
+import org.apache.spark.SparkEvents
 
 import graft.{MovieLensFixture, SparkSpec}
 import graft.etl.MovieLens
@@ -129,12 +129,12 @@ class ApiSpec extends SparkSpec {
     // instead of re-planning and re-scanning the source table
     val sc = spark.sparkContext
     val s = withIndex // connected outside the counted windows
-    val health = SpecBus.jobsDuring(sc) {
+    val health = SparkEvents.during(sc) {
       assert(s.handle("GET", "/health").status === 200)
-    }
-    val movie = SpecBus.jobsDuring(sc) {
+    }.jobs
+    val movie = SparkEvents.during(sc) {
       assert(s.handle("GET", "/movie/1").body("movieId") === 1)
-    }
+    }.jobs
     assert(health === 0, s"/health ran $health Spark jobs")
     assert(movie <= 1, s"/movie/1 ran $movie Spark jobs")
   }
@@ -148,11 +148,11 @@ class ApiSpec extends SparkSpec {
           e: Exception): Unit = { seen.incrementAndGet(); () }
     }
     val s = withIndex
-    SpecBus.drain(spark.sparkContext)
+    SparkEvents.drain(spark.sparkContext)
     spark.listenerManager.register(l)
     try {
       assert(s.handle("GET", "/health").status === 200)
-      SpecBus.drain(spark.sparkContext)
+      SparkEvents.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(l)
     assert(seen.get === 0, s"/health ran ${seen.get} query executions")
   }
@@ -165,10 +165,10 @@ class ApiSpec extends SparkSpec {
     val q = "the lion king"
     val first = search(withIndex, q, "1", "10")
     assert(first.status === 200)
-    val page2 = SpecBus.jobsDuring(sc)(assert(search(withIndex, q, "2", "10").status === 200))
+    val page2 = SparkEvents.during(sc)(assert(search(withIndex, q, "2", "10").status === 200)).jobs
     // the held list is keyed by analyzed terms: case and blanks do not matter
     var repeat: Api.Response = null
-    val again = SpecBus.jobsDuring(sc) { repeat = search(withIndex, " The LION king ", "1", "10") }
+    val again = SparkEvents.during(sc) { repeat = search(withIndex, " The LION king ", "1", "10") }.jobs
     assert(page2 === 0, s"page 2 of a ranked query ran $page2 Spark jobs")
     assert(again === 0, s"a repeat of page 1 ran $again Spark jobs")
     assert(Api.Json.render(repeat.body) === Api.Json.render(first.body))
@@ -178,13 +178,13 @@ class ApiSpec extends SparkSpec {
     val s = withIndex // connected outside the counted windows
     val sc = spark.sparkContext
     var r: Api.Response = null
-    val searchJobs = SpecBus.jobsDuring(sc) { r = search(s, "jurasic park", "1", "10") }
+    val searchJobs = SparkEvents.during(sc) { r = search(s, "jurasic park", "1", "10") }.jobs
     assert(r.status === 200 && r.body("total").asInstanceOf[Long] > 0, r)
-    val movieJobs = SpecBus.jobsDuring(sc) { r = s.handle("GET", "/movie/50") }
+    val movieJobs = SparkEvents.during(sc) { r = s.handle("GET", "/movie/50") }.jobs
     assert(r.status === 200, r)
-    val recJobs = SpecBus.jobsDuring(sc) {
+    val recJobs = SparkEvents.during(sc) {
       r = s.handle("POST", "/recommend", body = Some(Map("title" -> "Toy Story (1995)")))
-    }
+    }.jobs
     assert(r.status === 200 && r.body.contains("recommendations"), r)
     assert((searchJobs, movieJobs, recJobs) === ((0, 0, 0)),
       "Spark jobs per /search, /movie, /recommend")

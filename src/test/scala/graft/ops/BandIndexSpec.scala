@@ -97,43 +97,28 @@ class BandIndexSpec extends SparkSpec {
     Dedup.appendMinhashBandIndex(sigsOf(cleanFillers(1000L, 150)), path, "doc_id",
       k = 4, r = 2, nBuckets = nBuckets)
 
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val tm = sc.stageInfo.taskMetrics
-        if (tm != null) bytesRead.addAndGet(tm.inputMetrics.bytesRead)
-        ()
-      }
-    }
-    def quiesce(): Long = {
-      org.apache.spark.SpecBus.drain(spark.sparkContext)
-      bytesRead.get()
-    }
     def probeBytes(): (Set[(Long, Long)], Long) = {
-      quiesce()
-      val before = bytesRead.get()
+      var pairs: Set[(Long, Long)] = Set.empty
       // the probe's new side is a LocalRelation (no file input), so the
       // bytes-read delta is exactly the index scan
-      val pairs = Dedup.probeMinhashBandIndex(spark, path, sigsOf(probeDocs),
-          "doc_id", k = 4, r = 2, nBuckets = nBuckets)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      (pairs, quiesce() - before)
+      val bytes = org.apache.spark.SparkEvents.during(spark.sparkContext) {
+        pairs = Dedup.probeMinhashBandIndex(spark, path, sigsOf(probeDocs),
+            "doc_id", k = 4, r = 2, nBuckets = nBuckets)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      }.inputBytes
+      (pairs, bytes)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (pairs1, bytes1) = probeBytes()
-      assert(pairs1 === Set((10L, 900L)), s"planted collision not found: $pairs1")
-      assert(bytes1 > 0L, "the probe read no index bytes — the collision pin is vacuous")
-      // grow the index ~8× in non-colliding buckets only
-      (1 to 8).foreach(g => Dedup.appendMinhashBandIndex(
-        sigsOf(cleanFillers(g * 10000L, 150)), path, "doc_id", k = 4, r = 2,
-        nBuckets = nBuckets))
-      val (pairs2, bytes2) = probeBytes()
-      assert(pairs2 === pairs1)
-      assert(bytes2 === bytes1,
-        s"probe scan scales with the index: $bytes1 bytes before growth, $bytes2 after")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (pairs1, bytes1) = probeBytes()
+    assert(pairs1 === Set((10L, 900L)), s"planted collision not found: $pairs1")
+    assert(bytes1 > 0L, "the probe read no index bytes — the collision pin is vacuous")
+    // grow the index ~8× in non-colliding buckets only
+    (1 to 8).foreach(g => Dedup.appendMinhashBandIndex(
+      sigsOf(cleanFillers(g * 10000L, 150)), path, "doc_id", k = 4, r = 2,
+      nBuckets = nBuckets))
+    val (pairs2, bytes2) = probeBytes()
+    assert(pairs2 === pairs1)
+    assert(bytes2 === bytes1,
+      s"probe scan scales with the index: $bytes1 bytes before growth, $bytes2 after")
   }
 
   private def dataFilesByDir(path: String): Map[String, Seq[String]] = {
@@ -268,7 +253,7 @@ class BandIndexSpec extends SparkSpec {
     // but the distributed route pays that PLUS the distinct+collect — so
     // local construction must run strictly fewer jobs
     def jobsDuring(f: => Unit): Int =
-      org.apache.spark.SpecBus.jobsDuring(spark.sparkContext)(f)
+      org.apache.spark.SparkEvents.during(spark.sparkContext)(f).jobs
     val jLocal = jobsDuring {
       Dedup.probeSimhashBandIndex(spark, path, local, "media_id",
         maxHamming = 3, sigBits = 64); ()

@@ -243,7 +243,7 @@ class DedupSpec extends SparkSpec {
       val labels = Dedup.connectedComponents(path, maxIter = 15).collect()
         .map(r => r.getLong(1)).distinct
       assert(labels.toSeq === Seq(0L))
-      org.apache.spark.SpecBus.drain(spark.sparkContext)
+      org.apache.spark.SparkEvents.drain(spark.sparkContext)
       assert(!probes.isEmpty, "expected isEmpty convergence probes")
       probes.forEach { plan =>
         assert(!plan.contains("Join") && !plan.contains("Exchange"),

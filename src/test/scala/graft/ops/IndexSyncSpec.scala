@@ -193,35 +193,10 @@ class IndexSyncSpec extends SparkSpec {
         val v2 = Store.versions(spark, s"isj_docs_$suffix")
         val step2 = Store.changes(
           spark, s"isj_docs_$suffix", v2.head, v2.last).localCheckpoint()
-        val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            counter.incrementAndGet(); ()
-          }
-        }
-        // the listener bus is async: poll until the counter holds still
-        // (the Bench.quiesce rule) instead of a fixed sleep, so a loaded
-        // host neither leaks straggler events into the window nor cuts the
-        // sync's own trailing events out of it
-        def quiesce(): Int = {
-          var prev = counter.get(); var stable = 0; var polls = 0
-          while (stable < 3 && polls < 100) {
-            Thread.sleep(100)
-            val cur = counter.get()
-            if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-            polls += 1
-          }
-          prev
-        }
-        quiesce() // drain earlier work's straggler events
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          val before = quiesce()
+        org.apache.spark.SparkEvents.during(spark.sparkContext) {
           IndexSync.syncExactIndex(spark, step1, s"isj_idx_$suffix", "doc_id", "text")
           IndexSync.syncExactIndex(spark, step2, s"isj_idx_$suffix", "doc_id", "text")
-          quiesce() - before
-        } finally spark.sparkContext.removeSparkListener(listener)
+        }.jobs
       } finally Seq(s"isj_docs_$suffix", s"isj_idx_$suffix")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }

@@ -70,7 +70,7 @@ class StoreSpec extends SparkSpec {
     Store.bulkWrite(base, "dstage_b", "k", buckets = 4)
     try {
       val rows = Seq((7L, "X7"), (123L, "X123"), (401L, "NEW"), (88L, "X88"))
-      def jobs(f: => Unit): Int = org.apache.spark.SpecBus.jobsDuring(spark.sparkContext)(f)
+      def jobs(f: => Unit): Int = org.apache.spark.SparkEvents.during(spark.sparkContext)(f).jobs
       // LOCAL frame: the whole upsert — validation, routing, staged write
       // — must run driver-side, zero Spark jobs
       val jLocal = jobs {
@@ -114,7 +114,7 @@ class StoreSpec extends SparkSpec {
   test("a null id stages through the job path: same files as the distributed frame") {
     import spark.implicits._
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    def jobs(f: => Unit): Int = org.apache.spark.SpecBus.jobsDuring(spark.sparkContext)(f)
+    def jobs(f: => Unit): Int = org.apache.spark.SparkEvents.during(spark.sparkContext)(f).jobs
     // one partition, one bucket: every row lands in one file, so the
     // file's row order shows where the null id sorts
     def stage(df: org.apache.spark.sql.DataFrame, idCol: String): (Seq[(String, Seq[String])], Int) = {
@@ -144,10 +144,10 @@ class StoreSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("stage-codec")
     spark.conf.set(key, "lz4_raw")
     try {
-      val n = org.apache.spark.SpecBus.jobsDuring(spark.sparkContext) {
+      val n = org.apache.spark.SparkEvents.during(spark.sparkContext) {
         Store.stageWrite(spark, Seq((1L, "a"), (2L, "b")).toDF("k", "v")
           .withColumn(Store.PartCol, lit(0)), "k", 1, new org.apache.hadoop.fs.Path(dir.toUri), fs)
-      }
+      }.jobs
       assert(n === 0, "the frame should have staged driver-side")
     } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     val files = stagedFiles(dir)
@@ -577,6 +577,7 @@ class StoreSpec extends SparkSpec {
       import scala.sys.process._
       val cmd = Seq(javaBin) ++ jvmArgs ++ Seq(
         "-Xmx2g", "-Dspark.ui.enabled=false",
+        s"-Djava.io.tmpdir=${System.getProperty("java.io.tmpdir")}",
         "-cp", System.getProperty("java.class.path"),
         "graft.tools.MetastoreCheck", mode, dir)
       cmd.!(ProcessLogger(_ => (), _ => ())) // Spark logs are noise here
@@ -810,7 +811,7 @@ class StoreSpec extends SparkSpec {
     // probe disappears — observable as strictly fewer Spark jobs
     val df = spark.range(0L, 100000L, 1L, 8)
       .select(col("id"), (col("id") * 2L).as("v"))
-    def jobs(f: => Unit): Int = org.apache.spark.SpecBus.jobsDuring(spark.sparkContext)(f)
+    def jobs(f: => Unit): Int = org.apache.spark.SparkEvents.during(spark.sparkContext)(f).jobs
     val jDefault = jobs {
       assert(Store.localized(df.filter(col("id") >= 0L), cap = 100).count() === 100000L)
     }

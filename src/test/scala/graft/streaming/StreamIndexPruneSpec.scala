@@ -26,40 +26,10 @@ class StreamIndexPruneSpec extends SparkSpec {
 
   private val Parts = 32
 
-  // ——— shared measurement rig (the BandIndexSpec listener pattern) ———
+  // ——— shared measurement rig: the input bytes a block's stages read ———
 
-  private val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val listener = new org.apache.spark.scheduler.SparkListener {
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val tm = sc.stageInfo.taskMetrics
-      if (tm != null) bytesRead.addAndGet(tm.inputMetrics.bytesRead)
-      ()
-    }
-  }
-
-  private def quiesce(): Long = {
-    var prev = bytesRead.get(); var stable = 0; var polls = 0
-    while (stable < 3 && polls < 100) {
-      Thread.sleep(100)
-      val cur = bytesRead.get()
-      if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      polls += 1
-    }
-    prev
-  }
-
-  private def measured(body: => Unit): Long = {
-    quiesce()
-    val before = bytesRead.get()
-    body
-    quiesce() - before
-  }
-
-  private def withListener(body: => Unit): Unit = {
-    spark.sparkContext.addSparkListener(listener)
-    try body finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def measured(body: => Unit): Long =
+    org.apache.spark.SparkEvents.during(spark.sparkContext)(body).inputBytes
 
   /** Write `df` once as a single parquet file into a staging dir and
     * return the file — the byte-identical-replay trick: COPYING that
@@ -102,33 +72,31 @@ class StreamIndexPruneSpec extends SparkSpec {
     Store.bulkWrite(seed, table, "fingerprint", buckets = 4, parts = Parts)
     val probeKeys = Seq("key-3", "key-17").toDF("fingerprint")
     val pp = keyParts(probeKeys, "fingerprint")
-    withListener {
-      def probeBytes(): (Set[(String, Long)], Long) = {
-        var got: Set[(String, Long)] = Set.empty
-        val bytes = measured {
-          got = Store.probe(spark, table, probeKeys, "fingerprint")
-            .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-        }
-        (got, bytes)
+    def probeBytes(): (Set[(String, Long)], Long) = {
+      var got: Set[(String, Long)] = Set.empty
+      val bytes = measured {
+        got = Store.probe(spark, table, probeKeys, "fingerprint")
+          .collect().map(r => (r.getString(0), r.getLong(1))).toSet
       }
-      val (got1, bytes1) = probeBytes()
-      assert(got1 === Set(("key-3", 3L), ("key-17", 17L)))
-      assert(bytes1 > 0L, "the probe read no bytes — the pin is vacuous")
-      // grow ~8× strictly in partitions the probe keys do not route to
-      (1 to 8).foreach { g =>
-        val fill = rows(1000 * g, 400)
-        val clean = fill.join(
-          fill.filter(pmod(hash(col("fingerprint")), lit(Parts)).isin(pp.toSeq: _*))
-            .select(col("fingerprint")),
-          Seq("fingerprint"), "left_anti")
-          .localCheckpoint()
-        Store.upsert(spark, table, clean, "fingerprint", buckets = 4)
-      }
-      val (got2, bytes2) = probeBytes()
-      assert(got2 === got1)
-      assert(bytes2 === bytes1,
-        s"probe scan scales with the table: $bytes1 bytes before growth, $bytes2 after")
+      (got, bytes)
     }
+    val (got1, bytes1) = probeBytes()
+    assert(got1 === Set(("key-3", 3L), ("key-17", 17L)))
+    assert(bytes1 > 0L, "the probe read no bytes — the pin is vacuous")
+    // grow ~8× strictly in partitions the probe keys do not route to
+    (1 to 8).foreach { g =>
+      val fill = rows(1000 * g, 400)
+      val clean = fill.join(
+        fill.filter(pmod(hash(col("fingerprint")), lit(Parts)).isin(pp.toSeq: _*))
+          .select(col("fingerprint")),
+        Seq("fingerprint"), "left_anti")
+        .localCheckpoint()
+      Store.upsert(spark, table, clean, "fingerprint", buckets = 4)
+    }
+    val (got2, bytes2) = probeBytes()
+    assert(got2 === got1)
+    assert(bytes2 === bytes1,
+      s"probe scan scales with the table: $bytes1 bytes before growth, $bytes2 after")
     spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
@@ -180,25 +148,23 @@ class StreamIndexPruneSpec extends SparkSpec {
         .option("maxFilesPerTrigger", 1).parquet(srcDir),
       "doc_id", "text", table, labelsOut, checkpointLocation = Some(ckpt))
     try {
-      withListener {
-        q.processAllAvailable() // seed indexed
-        val bytes1 = measured {
-          copyIn(staged, srcDir, "probe1.parquet")
-          q.processAllAvailable()
-        }
-        assert(bytes1 > 0L)
-        (1 to 4).foreach { g =>
-          cleanGrowth(10000L * g, 400, words = 6, tag = "xg", avoid = pp, keyOf = fpOf)
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          q.processAllAvailable()
-        }
-        val bytes2 = measured {
-          copyIn(staged, srcDir, "probe2.parquet")
-          q.processAllAvailable()
-        }
-        assert(bytes2 === bytes1,
-          s"probe trigger scales with the index: $bytes1 bytes before growth, $bytes2 after")
+      q.processAllAvailable() // seed indexed
+      val bytes1 = measured {
+        copyIn(staged, srcDir, "probe1.parquet")
+        q.processAllAvailable()
       }
+      assert(bytes1 > 0L)
+      (1 to 4).foreach { g =>
+        cleanGrowth(10000L * g, 400, words = 6, tag = "xg", avoid = pp, keyOf = fpOf)
+          .coalesce(1).write.mode("append").parquet(srcDir)
+        q.processAllAvailable()
+      }
+      val bytes2 = measured {
+        copyIn(staged, srcDir, "probe2.parquet")
+        q.processAllAvailable()
+      }
+      assert(bytes2 === bytes1,
+        s"probe trigger scales with the index: $bytes1 bytes before growth, $bytes2 after")
       // both probe triggers labeled the replay as dups of the seed keepers
       val labels = spark.read.parquet(labelsOut)
         .filter(col("doc_id").isin(903L, 907L))
@@ -231,25 +197,23 @@ class StreamIndexPruneSpec extends SparkSpec {
         .option("maxFilesPerTrigger", 1).parquet(srcDir),
       "doc_id", "text", table, scoresOut, checkpointLocation = Some(ckpt))
     try {
-      withListener {
+      q.processAllAvailable()
+      val bytes1 = measured {
+        copyIn(staged, srcDir, "probe1.parquet")
         q.processAllAvailable()
-        val bytes1 = measured {
-          copyIn(staged, srcDir, "probe1.parquet")
-          q.processAllAvailable()
-        }
-        assert(bytes1 > 0L)
-        (1 to 4).foreach { g =>
-          cleanGrowth(10000L * g, 250, words = 6, tag = "ng", avoid = pp, keyOf = shOf)
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          q.processAllAvailable()
-        }
-        val bytes2 = measured {
-          copyIn(staged, srcDir, "probe2.parquet")
-          q.processAllAvailable()
-        }
-        assert(bytes2 === bytes1,
-          s"probe trigger scales with the index: $bytes1 bytes before growth, $bytes2 after")
       }
+      assert(bytes1 > 0L)
+      (1 to 4).foreach { g =>
+        cleanGrowth(10000L * g, 250, words = 6, tag = "ng", avoid = pp, keyOf = shOf)
+          .coalesce(1).write.mode("append").parquet(srcDir)
+        q.processAllAvailable()
+      }
+      val bytes2 = measured {
+        copyIn(staged, srcDir, "probe2.parquet")
+        q.processAllAvailable()
+      }
+      assert(bytes2 === bytes1,
+        s"probe trigger scales with the index: $bytes1 bytes before growth, $bytes2 after")
       // replayed shingles are all stale — novelty 0 from both triggers
       val scores = spark.read.parquet(scoresOut).filter(col("doc_id").isin(905L, 911L))
         .select(col("doc_id"), col("n_novel")).collect()
@@ -283,25 +247,23 @@ class StreamIndexPruneSpec extends SparkSpec {
         .option("maxFilesPerTrigger", 1).parquet(srcDir),
       "doc_id", "text", table, cleanOut, w = 5, checkpointLocation = Some(ckpt))
     try {
-      withListener {
+      q.processAllAvailable()
+      val bytes1 = measured {
+        copyIn(staged, srcDir, "probe1.parquet")
         q.processAllAvailable()
-        val bytes1 = measured {
-          copyIn(staged, srcDir, "probe1.parquet")
-          q.processAllAvailable()
-        }
-        assert(bytes1 > 0L)
-        (1 to 4).foreach { g =>
-          cleanGrowth(10000L * g, 250, words = 10, tag = "sg", avoid = pp, keyOf = digOf)
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          q.processAllAvailable()
-        }
-        val bytes2 = measured {
-          copyIn(staged, srcDir, "probe2.parquet")
-          q.processAllAvailable()
-        }
-        assert(bytes2 === bytes1,
-          s"probe trigger scales with the index: $bytes1 bytes before growth, $bytes2 after")
       }
+      assert(bytes1 > 0L)
+      (1 to 4).foreach { g =>
+        cleanGrowth(10000L * g, 250, words = 10, tag = "sg", avoid = pp, keyOf = digOf)
+          .coalesce(1).write.mode("append").parquet(srcDir)
+        q.processAllAvailable()
+      }
+      val bytes2 = measured {
+        copyIn(staged, srcDir, "probe2.parquet")
+        q.processAllAvailable()
+      }
+      assert(bytes2 === bytes1,
+        s"probe trigger scales with the index: $bytes1 bytes before growth, $bytes2 after")
       // every replayed chunk is owned by its seed twin — nothing survives
       val rebuilt = spark.read.parquet(cleanOut).filter(col("doc_id").isin(902L, 909L))
         .select(col("doc_id"), col("n_kept")).collect()
@@ -347,33 +309,31 @@ class StreamIndexPruneSpec extends SparkSpec {
       outRoot + "/imgidx", outRoot + "/audidx", fpTable, labTable, fwdTable,
       outRoot + "/pairs", checkpointLocation = Some(ckpt))
     try {
-      withListener {
+      q.processAllAvailable()
+      val bytes1 = measured {
+        copyIn(staged, srcDir, "probe1.parquet")
         q.processAllAvailable()
-        val bytes1 = measured {
-          copyIn(staged, srcDir, "probe1.parquet")
-          q.processAllAvailable()
-        }
-        assert(bytes1 > 0L)
-        (1 to 3).foreach { g =>
-          val cand = (0 until 250).map(i =>
-            (100000L * g + i, s"cm growth ${100000L * g + i} body words"))
-          val df = mediaDocs(cand)
-          val dirty = df.select(col("doc_id"),
-              pmod(hash(Dedup.exactFingerprint(col("text"))), lit(Parts)).as("__fp"),
-              pmod(hash(col("doc_id")), lit(Parts)).as("__lp"))
-            .filter(col("__fp").isin(fpPP.toSeq: _*) || col("__lp").isin(labPP.toSeq: _*))
-            .select(col("doc_id"))
-          df.join(dirty, Seq("doc_id"), "left_anti")
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          q.processAllAvailable()
-        }
-        val bytes2 = measured {
-          copyIn(staged, srcDir, "probe2.parquet")
-          q.processAllAvailable()
-        }
-        assert(bytes2 === bytes1,
-          s"probe trigger scales with the index: $bytes1 bytes before growth, $bytes2 after")
       }
+      assert(bytes1 > 0L)
+      (1 to 3).foreach { g =>
+        val cand = (0 until 250).map(i =>
+          (100000L * g + i, s"cm growth ${100000L * g + i} body words"))
+        val df = mediaDocs(cand)
+        val dirty = df.select(col("doc_id"),
+            pmod(hash(Dedup.exactFingerprint(col("text"))), lit(Parts)).as("__fp"),
+            pmod(hash(col("doc_id")), lit(Parts)).as("__lp"))
+          .filter(col("__fp").isin(fpPP.toSeq: _*) || col("__lp").isin(labPP.toSeq: _*))
+          .select(col("doc_id"))
+        df.join(dirty, Seq("doc_id"), "left_anti")
+          .coalesce(1).write.mode("append").parquet(srcDir)
+        q.processAllAvailable()
+      }
+      val bytes2 = measured {
+        copyIn(staged, srcDir, "probe2.parquet")
+        q.processAllAvailable()
+      }
+      assert(bytes2 === bytes1,
+        s"probe trigger scales with the index: $bytes1 bytes before growth, $bytes2 after")
       // the replays paired each probe id with its seed twin, both times
       val pairs = spark.read.parquet(outRoot + "/pairs").distinct()
         .filter(col("id_b") >= 900L)
@@ -416,49 +376,47 @@ class StreamIndexPruneSpec extends SparkSpec {
       // batch keys' routing partitions, so growth routes away from them
       val pp = keyParts(batchOf(Seq("gk3", "gk7"), 0)
         .select(col("k").as("key")), "key")
-      withListener {
-        // measurement = an APPLIED fold of the same two keys (r19: a
-        // REFUSED replay now decides from the manifest meta alone and
-        // reads zero table bytes, so the probe to pin lives only on the
-        // applied path). Compact first so each measurement's probe reads
-        // one generation per partition.
-        def foldBytes(id: Long, vBase: Int): Long = {
-          Store.compact(spark, table)
-          measured {
-            assert(apply(batchOf(Seq("gk3", "gk7"), vBase), toKV, table, id),
-              "the measured trigger must be an applied fold")
-          }
+      // measurement = an APPLIED fold of the same two keys (r19: a
+      // REFUSED replay now decides from the manifest meta alone and
+      // reads zero table bytes, so the probe to pin lives only on the
+      // applied path). Compact first so each measurement's probe reads
+      // one generation per partition.
+      def foldBytes(id: Long, vBase: Int): Long = {
+        Store.compact(spark, table)
+        measured {
+          assert(apply(batchOf(Seq("gk3", "gk7"), vBase), toKV, table, id),
+            "the measured trigger must be an applied fold")
         }
-        val bytes1 = foldBytes(3L, 200)
-        assert(bytes1 > 0L, "the fold read no bytes — the pin is vacuous")
-        // the meta-watermark refusal contract: a replayed id is decided
-        // from the manifest alone — no commit happens (manifest version
-        // unchanged), and the probed partitions' files never move
-        val vBefore = Store.readManifest(spark, table).get._1
-        assert(!apply(batchOf(Seq("gk3", "gk7"), 200), toKV, table, 3L),
-          "the replayed id must refuse")
-        assert(Store.readManifest(spark, table).get._1 === vBefore,
-          "a refused replay must not commit a manifest version")
-        // grow the state table ~8× strictly in keys that route AWAY from
-        // the probe keys' partitions, under fresh monotone batch ids
-        (1 to 8).foreach { g =>
-          val growKeys = (0 until 40).map(i => s"grow-$g-$i").toDF("key")
-            .withColumn("__p", pmod(hash(col("key")), lit(Parts)))
-            .collect().filterNot(r => pp.contains(r.getInt(1)))
-            .map(_.getString(0)).toSeq
-          assert(apply(batchOf(growKeys, 1000 * g), toKV, table, 3L + g))
-        }
-        val bytes2 = foldBytes(12L, 300)
-        // both measurements run post-compaction (one generation per
-        // partition). The probed keys' sketches absorbed one more fold
-        // between the measurements, so their rows are a few bytes
-        // heavier — the contract is NO SCALING with the 8× unprobed
-        // growth (a lost pruning reads ~8× here), not byte equality
-        assert(bytes2 <= bytes1 * 3 / 2 + 4096,
-          s"grouped probe scales with the state table: $bytes1 before growth, $bytes2 after")
-        val nKeys = Store.read(spark, table).count()
-        assert(nKeys > 200L, s"growth did not land ($nKeys keys) — the pin is vacuous")
       }
+      val bytes1 = foldBytes(3L, 200)
+      assert(bytes1 > 0L, "the fold read no bytes — the pin is vacuous")
+      // the meta-watermark refusal contract: a replayed id is decided
+      // from the manifest alone — no commit happens (manifest version
+      // unchanged), and the probed partitions' files never move
+      val vBefore = Store.readManifest(spark, table).get._1
+      assert(!apply(batchOf(Seq("gk3", "gk7"), 200), toKV, table, 3L),
+        "the replayed id must refuse")
+      assert(Store.readManifest(spark, table).get._1 === vBefore,
+        "a refused replay must not commit a manifest version")
+      // grow the state table ~8× strictly in keys that route AWAY from
+      // the probe keys' partitions, under fresh monotone batch ids
+      (1 to 8).foreach { g =>
+        val growKeys = (0 until 40).map(i => s"grow-$g-$i").toDF("key")
+          .withColumn("__p", pmod(hash(col("key")), lit(Parts)))
+          .collect().filterNot(r => pp.contains(r.getInt(1)))
+          .map(_.getString(0)).toSeq
+        assert(apply(batchOf(growKeys, 1000 * g), toKV, table, 3L + g))
+      }
+      val bytes2 = foldBytes(12L, 300)
+      // both measurements run post-compaction (one generation per
+      // partition). The probed keys' sketches absorbed one more fold
+      // between the measurements, so their rows are a few bytes
+      // heavier — the contract is NO SCALING with the 8× unprobed
+      // growth (a lost pruning reads ~8× here), not byte equality
+      assert(bytes2 <= bytes1 * 3 / 2 + 4096,
+        s"grouped probe scales with the state table: $bytes1 before growth, $bytes2 after")
+      val nKeys = Store.read(spark, table).count()
+      assert(nKeys > 200L, s"growth did not land ($nKeys keys) — the pin is vacuous")
       spark.sql(s"DROP TABLE IF EXISTS $table")
     }
 
@@ -497,7 +455,7 @@ class StreamIndexPruneSpec extends SparkSpec {
     val singles = Seq("ms_kll_tab", "ms_hll_tab", "ms_cms_tab")
     (singles :+ "ms_multi_tab").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     def countJobs(f: => Unit): Int =
-      org.apache.spark.SpecBus.jobsDuring(spark.sparkContext)(f)
+      org.apache.spark.SparkEvents.during(spark.sparkContext)(f).jobs
     // seed both shapes (table creation paths excluded from the measure)
     def applySingles(b: DataFrame, id: Long): Unit = {
       EventStream.applyGroupedQuantileBatch(b, toKV, "ms_kll_tab", id, k = 200)

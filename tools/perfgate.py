@@ -23,8 +23,8 @@ objects {"reason": str, "max_jobs": int, "max_shuffle_write": int}: the
 recorded-reason escape hatch is CAPPED at the job count / byte level that
 was actually accepted (ADVICE r18: an uncapped allowlist masks future
 unrelated regressions on allowlisted queries forever). Growth beyond the
-recorded cap fails like any other query. Legacy bare-string entries are
-treated as uncapped and flagged with a WARN so they get migrated.
+recorded cap fails like any other query. A bare-string entry (a reason
+with no cap) is refused with an error naming the query.
 
 The committed baseline (tools/plan_metrics_baseline.json) is refreshed at
 each round's end from the final bench record, so the gate always measures
@@ -47,23 +47,26 @@ def load_metrics(path):
     return rec, {}
 
 
+def parse_allow(raw):
+    """Allowlist entries by query; raises ValueError on an uncapped entry."""
+    allow = {}
+    for q, v in raw.items():
+        if not isinstance(v, dict):
+            raise ValueError(
+                f"allowlist entry for {q} is not an object with a reason and "
+                f"its max_jobs/max_shuffle_write caps")
+        allow[q] = {"reason": v.get("reason", ""),
+                    "max_jobs": v.get("max_jobs"),
+                    "max_shuffle_write": v.get("max_shuffle_write")}
+    return allow
+
+
 def load_allow():
     allow_path = os.path.join(os.path.dirname(__file__), "perfgate_allow.json")
     if not os.path.exists(allow_path):
         return {}
     with open(allow_path) as f:
-        raw = json.load(f)
-    allow = {}
-    for q, v in raw.items():
-        if isinstance(v, str):
-            allow[q] = {"reason": v, "max_jobs": None, "max_shuffle_write": None,
-                        "legacy": True}
-        else:
-            allow[q] = {"reason": v.get("reason", ""),
-                        "max_jobs": v.get("max_jobs"),
-                        "max_shuffle_write": v.get("max_shuffle_write"),
-                        "legacy": False}
-    return allow
+        return parse_allow(json.load(f))
 
 
 def byte_cap(base):
@@ -82,10 +85,8 @@ def gate(base_pm, cur_pm, base_q, cur_q, allow):
         if c < b:
             lines.append(f"OK   {q}: jobs {b} -> {c} (improved)")
         elif c > b:
-            cap = ent and (ent["max_jobs"] if not ent["legacy"] else c)
-            if ent and ent["legacy"]:
-                lines.append(f"WARN {q}: legacy uncapped allowlist entry — record max_jobs")
-            if ent and cap is not None and c <= cap:
+            cap = ent["max_jobs"] if ent else None
+            if cap is not None and c <= cap:
                 lines.append(f"ALLOW {q}: jobs {b} -> {c} (cap {cap}) — {ent['reason']}")
             else:
                 w = ""
@@ -98,12 +99,8 @@ def gate(base_pm, cur_pm, base_q, cur_q, allow):
             # the recorded cap is ABSOLUTE — the band already widened the
             # baseline trigger, so banding the cap too would let an
             # allowlisted query grow ~50%+256KiB past its accepted bytes
-            bcap = ent.get("max_shuffle_write") if ent else None
-            if ent and ent["legacy"]:
-                lines.append(
-                    f"WARN {q}: legacy uncapped allowlist entry — byte growth "
-                    f"{bw} -> {cw} allowed only until max_shuffle_write is recorded")
-            elif ent and bcap is not None and cw <= bcap:
+            bcap = ent["max_shuffle_write"] if ent else None
+            if bcap is not None and cw <= bcap:
                 lines.append(
                     f"ALLOW {q}: shuffle_write {bw} -> {cw} (cap {bcap}) — {ent['reason']}")
             else:
@@ -118,12 +115,13 @@ def gate(base_pm, cur_pm, base_q, cur_q, allow):
 
 def selftest():
     """The gate must (a) catch a synthetic lost-pushdown byte inflation and a
-    job-count growth past an allowlist cap, and (b) pass identical records."""
+    job-count growth past an allowlist cap, (b) pass identical records and
+    (c) refuse an uncapped allowlist entry."""
     base = {"qx": {"jobs": 10, "shuffle_write": 1_000_000},
             "qy": {"jobs": 5, "shuffle_write": 50_000},
             "qz": {"jobs": 7, "shuffle_write": 10_000}}
-    allow = {"qy": {"reason": "recorded trade", "max_jobs": 6,
-                    "max_shuffle_write": 50_000, "legacy": False}}
+    allow = parse_allow({"qy": {"reason": "recorded trade", "max_jobs": 6,
+                                "max_shuffle_write": 50_000}})
     # identical → pass
     f0, _, _ = gate(base, base, {}, {}, allow)
     assert not f0, f"identical records must pass, got {f0}"
@@ -151,8 +149,8 @@ def selftest():
     # absolute — the band widened the baseline trigger, it must not
     # stack on the cap too (code-review r19)
     base5 = {"qy": {"jobs": 5, "shuffle_write": 10_000_000}}
-    allow5 = {"qy": {"reason": "trade", "max_jobs": 5,
-                     "max_shuffle_write": 20_000_000, "legacy": False}}
+    allow5 = parse_allow({"qy": {"reason": "trade", "max_jobs": 5,
+                                 "max_shuffle_write": 20_000_000}})
     cur5 = {"qy": {"jobs": 5, "shuffle_write": 60_000_000}}  # > band AND > cap
     f5, _, _ = gate(base5, cur5, {}, {}, allow5)
     assert ("qy", "shuffle_write") in f5, f"byte cap not absolute: {f5}"
@@ -160,7 +158,13 @@ def selftest():
     cur6 = {"qy": {"jobs": 5, "shuffle_write": 18_000_000}}
     f6, _, _ = gate(base5, cur6, {}, {}, allow5)
     assert not f6, f"in-cap byte growth must be allowed: {f6}"
-    print("perfgate selftest: pass (7 scenarios)")
+    # a bare-string entry carries no cap → refused, naming its query
+    try:
+        parse_allow({"qw": "a reason with no cap"})
+        raise AssertionError("a bare-string allowlist entry must be refused")
+    except ValueError as e:
+        assert "qw" in str(e), f"refusal must name the query: {e}"
+    print("perfgate selftest: pass (8 scenarios)")
     return 0
 
 
@@ -173,7 +177,11 @@ def main():
         return 2
     base_pm, base_q = load_metrics(args[0])
     cur_pm, cur_q = load_metrics(args[1])
-    allow = load_allow()
+    try:
+        allow = load_allow()
+    except ValueError as e:
+        print(f"perfgate: {e}")
+        return 2
 
     fails, lines, common = gate(base_pm, cur_pm, base_q, cur_q, allow)
     for ln in lines:
