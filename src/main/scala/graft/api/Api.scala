@@ -14,12 +14,9 @@ import graft.sources.Store
   * it. Bodies are JSON-shaped (`Map`/`Seq`/scalars) with a renderer
   * ([[Json.render]]) producing the bytes a transport would send.
   *
-  * Responses are collected at the serving boundary, exactly where the
-  * reference materializes its ES hit lists: ≤5 rows (recommend), 1 row
-  * (movie), ≤100 rows (one search page). The other driver-resident data
-  * stays under [[graft.sources.Store.localized]]'s caps: the movies
-  * snapshot `connect` holds, and the ranked hit lists of the queries a
-  * service has answered, which feed every page and total.
+  * Every route answers from the one driver-resident movies snapshot
+  * ([[Engine.Snapshot]]) that `connect` builds, which stays under
+  * [[graft.sources.Store.localized]]'s caps.
   */
 object Api {
 
@@ -37,35 +34,6 @@ object Api {
   private[api] def internalError(route: String, e: Throwable): Response = {
     log.warn(s"500 on $route: ${e.getClass.getName}: ${e.getMessage}")
     err(500, "Internal server error")
-  }
-
-  /** Ranked hit lists keyed by analyzed query terms, least recently used
-    * first out once they hold more than `budgetRows` rows in all (an
-    * empty list weighs one row). Only the map operations lock; a miss is
-    * ranked outside the lock and offered with [[putIfAbsent]], so two
-    * requests racing on one new query may both rank it, and both serve
-    * the list that was stored first.
-    */
-  private final class HeldHits(budgetRows: Long) {
-    private val lru =
-      new java.util.LinkedHashMap[Seq[String], Engine.Ranked](16, 0.75f, true)
-    private var rows = 0L
-    private def weight(r: Engine.Ranked): Long = math.max(1, r.rows.length).toLong
-
-    def get(key: Seq[String]): Option[Engine.Ranked] = synchronized(Option(lru.get(key)))
-
-    def putIfAbsent(key: Seq[String], r: Engine.Ranked): Engine.Ranked = synchronized {
-      Option(lru.get(key)).getOrElse {
-        lru.put(key, r)
-        rows += weight(r)
-        val eldest = lru.values.iterator
-        while (rows > budgetRows && eldest.hasNext) {
-          val e = eldest.next()
-          if (e ne r) { rows -= weight(e); eldest.remove() }
-        }
-        r
-      }
-    }
   }
 
   /** Minimal JSON renderer for response bodies (strings, numbers, booleans,
@@ -117,45 +85,32 @@ object Api {
     *
     * Snapshot contract: the index a service serves is built offline and
     * does not change while it is served, so `connect` materializes the
-    * tables once and every request reads that copy instead of re-planning
-    * a scan of the source table.
-    *  - The movies table is held driver-resident ([[Store.localized]];
-    *    1,682 rows in MovieLens-100k, far under its caps), and analyzed
-    *    once ([[Engine.snapshot]]): titles normalized, search fields
-    *    tokenized. `/movie`, `/recommend` and `/search` then answer on
-    *    the driver, with no Spark job or plan per request, under the
-    *    same scoring contracts as the Spark queries (EngineSpec pins
-    *    them equal).
-    *  - Only a snapshot past those caps stays distributed, and the
-    *    routes run their Spark queries. Then the posting index is loaded
-    *    and cached (`persist` plus one materializing count), and
-    *    `/search` ranks through it, or through the full scan without one.
+    * movies table once and every request reads that copy.
+    *  - The table is held driver-resident ([[Store.localized]]; 1,682
+    *    rows in MovieLens-100k, far under its caps) and analyzed once
+    *    ([[Engine.snapshot]]): titles normalized, search fields
+    *    tokenized. `/movie`, `/recommend` and `/search` answer on the
+    *    driver, with no Spark job or plan per request, under the same
+    *    scoring contracts as the Spark queries (EngineSpec pins them
+    *    equal). Each `/search` ranks its query afresh and cuts the page
+    *    from that list.
+    *  - A table past those caps is refused: [[Engine.snapshot]] throws,
+    *    `connect` logs each failed attempt and returns false, and every
+    *    guarded route answers 503.
     *  - The availability probe (`/health` and every guarded route)
-    *    reads a flag `connect` sets from the held movies snapshot, so it
+    *    reads a flag `connect` sets from the snapshot's row count, so it
     *    plans no query.
-    *  - `/search` ranks each distinct query once: the ranked hit list
-    *    ([[Engine.Ranked]], at most [[graft.ops.Paging.MaxResultWindow]]
-    *    rows plus the total) is held under the query's analyzed terms
-    *    ([[Engine.terms]]), which is all any scorer sees. Its first
-    *    page, later pages and repeats are slices of that list and run no
-    *    Spark job. The lists are bounded by
-    *    [[graft.sources.Store.MaxLocalStatsRows]] held rows in all,
-    *    least recently used evicted first.
     *  - A rebuilt Store table is served only after a new `Service`
-    *    connects: the held snapshot and the held hit lists live and die
-    *    with the `Service`.
+    *    connects: the snapshot lives and dies with the `Service`.
     *
-    * @param loadMovies called once on first use (the ES-client analog);
-    *                   a throwing loader = unavailable backend
+    * @param loadMovies called on each connect attempt until one succeeds
+    *                   (the ES-client analog); a throwing loader =
+    *                   unavailable backend
     * @param sleep injected for tests (the reference sleeps 5 s between
     *              connection attempts)
-    * @param loadPosting optional fuzzy-search posting index
-    *                    ([[graft.search.Posting]]); loaded only for a
-    *                    snapshot past the local caps, where /search
-    *                    scores via the candidate pre-gated index path —
-    *                    the configuration a 100 TB corpus serves with —
-    *                    with an identical response envelope (EngineSpec
-    *                    pins all three scorers' hits equal)
+    * @param loadPosting unused: the snapshot scores `/search` itself.
+    *                    Kept only so existing callers that pass it still
+    *                    compile.
     */
   final class Service(
       loadMovies: () => DataFrame,
@@ -167,52 +122,38 @@ object Api {
     // concurrent adapter must never observe a torn reference; connect()
     // is additionally synchronized so two racing connects cannot run the
     // loader twice (ADVICE r4). Handlers only read the reference.
-    private val movies =
-      new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
-    private val posting =
-      new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
-    // the driver-resident snapshot every route reads; None past the
-    // localized caps, where the routes run Spark queries
     private val snapshot =
       new java.util.concurrent.atomic.AtomicReference[Option[Engine.Snapshot]](None)
-    // the availability probe: set by connect after `movies`, read by
+    // the availability probe: set by connect after `snapshot`, read by
     // every guarded request
     @volatile private var up = false
-    private val held = new HeldHits(Store.MaxLocalStatsRows.toLong)
 
-    /** Connected movies table; handlers run behind [[guarded]], so a miss
+    /** The connected snapshot; handlers run behind [[guarded]], so a miss
       * here is a bug, not a user-visible state.
       */
-    private def backend: DataFrame = movies.get().get
+    private def served: Engine.Snapshot = snapshot.get().get
 
     /** `init_elasticsearch` analog: retry the backend probe with a fixed
-      * delay; false once retries are exhausted.
+      * delay, logging one WARN line per failed attempt; false once
+      * retries are exhausted.
       */
     def connect(maxRetries: Int = 5, delayMs: Long = 5000L): Boolean = synchronized {
       var attempt = 0
       while (attempt < maxRetries) {
         try {
-          if (movies.get().isEmpty) movies.set(Some(Store.localized(loadMovies())))
-          if (snapshot.get().isEmpty && Store.isLocalFrame(backend))
-            snapshot.set(Some(Engine.snapshot(backend)))
-          if (snapshot.get().isEmpty && posting.get().isEmpty)
-            posting.set(loadPosting.map(l => cached(l())))
-          up = Engine.health(backend)
+          if (snapshot.get().isEmpty)
+            snapshot.set(Some(Engine.snapshot(Store.localized(loadMovies()))))
+          up = served.size > 0
           if (up) return true
-        } catch { case _: Exception => () }
+        } catch {
+          case e: Exception =>
+            log.warn(s"connect attempt ${attempt + 1}/$maxRetries failed: " +
+              s"${e.getClass.getName}: ${e.getMessage}")
+        }
         attempt += 1
         if (attempt < maxRetries) sleep(delayMs)
       }
       false
-    }
-
-    /** `df` persisted and materialized by one count; released again if
-      * the count fails, so a retried connect leaves no cache behind.
-      */
-    private def cached(df: DataFrame): DataFrame = {
-      val p = df.persist()
-      try { p.count(); p }
-      catch { case e: Exception => p.unpersist(); throw e }
     }
 
     /** Route dispatch: (method, path, query params, JSON body) → Response.
@@ -272,7 +213,7 @@ object Api {
           b.get("title").map(_.toString).filter(_.nonEmpty) match {
             case None => err(400, "Title is required")
             case Some(title) =>
-              snapshot.get().fold(Engine.recommend(backend, title))(_.recommend(title)) match {
+              served.recommend(title) match {
                 case Engine.NotFound(_) => err(404, "Movie not found")
                 case Engine.Disambiguation(cands) =>
                   Response(200, Map(
@@ -280,31 +221,20 @@ object Api {
                     "movies" -> cands.map { case (id, t) =>
                       Map("movieId" -> id, "title" -> t)
                     }))
-                case Engine.Recommendations((id, _), recs) =>
-                  recommended(Engine.movieById(backend, id).collect().head, recs.collect().toSeq)
-                case Engine.Recommended(m, recs) => recommended(m, recs)
+                case Engine.Recommended(m, recs) =>
+                  Response(200, Map("movie" -> doc(m), "recommendations" -> recs.map(doc)))
+                case other => sys.error(s"unexpected recommend result $other")
               }
           }
       }
 
-    private def recommended(m: Row, recs: Seq[Row]): Response =
-      Response(200, Map("movie" -> doc(m), "recommendations" -> recs.map(doc)))
-
     private def movieRoute(id: String): Response =
       // the reference term-queries the raw string (api.py:168-178): a
       // non-numeric id simply matches nothing → the same 404
-      id.toIntOption.flatMap(i => snapshot.get()
-        .fold(Engine.movieById(backend, i).collect().headOption)(_.movie(i))) match {
+      id.toIntOption.flatMap(served.movie) match {
         case Some(row) => Response(200, doc(row))
         case None      => err(404, "Movie not found")
       }
-
-    /** The query's held ranked list, ranked now on a miss. */
-    private def rankedHits(q: String): Engine.Ranked = {
-      val key = Engine.terms(q)
-      held.get(key).getOrElse(held.putIfAbsent(key,
-        snapshot.get().fold(Engine.ranked(backend, q, posting.get()))(_.ranked(q))))
-    }
 
     private def searchRoute(params: Map[String, String]): Response =
       params.get("q").filter(_.nonEmpty) match {
@@ -334,7 +264,7 @@ object Api {
           } yield {
             val page = if (rawPage < 1) 1 else rawPage
             val size = if (rawSize < 1 || rawSize > 100) 10 else rawSize
-            val hits = rankedHits(q)
+            val hits = served.ranked(q)
             Response(200, Map(
               "movies" -> hits.page(page, size).map(doc),
               "page" -> page,

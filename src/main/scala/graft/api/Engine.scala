@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.search.{Analyzer, Scoring}
+import graft.sources.Store
 
 /** Endpoint-equivalent query layer — each reference Flask route
   * (`/root/reference/src/api.py`) compiles to a DataFrame expression over
@@ -266,6 +267,9 @@ object Engine {
       Ranked(hits.take(graft.ops.Paging.MaxResultWindow), hits.length.toLong, scored)
     }
 
+    /** The number of movie rows held. */
+    def size: Int = rows.length
+
     /** [[Engine.movieById]]'s row. */
     def movie(movieId: Int): Option[Row] = byId.get(movieId)
 
@@ -302,10 +306,14 @@ object Engine {
   }
 
   /** `movies` with its normalized titles and search-field tokens,
-    * collected once. Call it on a driver-resident frame
-    * ([[graft.sources.Store.localized]]): it holds every row on the driver.
+    * collected once. It holds every row on the driver, so it refuses a
+    * frame that is not driver-resident: one that
+    * [[graft.sources.Store.localized]] left distributed because it is
+    * past the local caps.
     */
   def snapshot(movies: DataFrame): Snapshot = {
+    require(Store.isLocalFrame(movies),
+      s"the movies frame is not driver-resident (Store.localized caps: ${Store.LocalCaps})")
     val width = movies.schema.length
     val analyzed = movies.select(col("*") +: Analyzer.normalize(col("title")).as("_title") +:
       searchFields.zipWithIndex.map { case ((c, _), i) => Analyzer.tokens(c).as(s"_tokens$i") }: _*)

@@ -271,7 +271,7 @@ object Relational {
             .collect()
           last = Some(Seq(
             rows.last.getAs[Double]("o_totalprice"),
-            rows.last.getAs[Long]("o_orderkey")))
+            rows.last.getAs[Long]("o_orderkey").toDouble))
           rows.map(r => (p, r.getLong(0), r.getLong(1), r.getDouble(2)))
         }
         pages.toDF("page", "o_orderkey", "o_custkey", "o_totalprice")
@@ -307,7 +307,7 @@ object Relational {
           .select(col("o_totalprice"), col("o_orderkey"))
           .head()
         graft.ops.Paging.searchAfter(Tables.orders(s, dir), sortCols,
-            Some(Seq(b.getDouble(0), b.getLong(1))), 50)
+            Some(Seq(b.getDouble(0), b.getLong(1).toDouble)), 50)
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
           .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       },

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions.{col, collect_set, count, first, hash, lit
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileSystem, Path}
 
+import scala.collection.immutable.ArraySeq
+
 /** Managed-table layer — the engine-native replacement for the reference's
   * Elasticsearch index sinks (SURVEY §2.1 S6/S7).
   *
@@ -102,11 +104,9 @@ object Store {
     * whose optimized plan is a LocalRelation under this many rows gets
     * its stats/routing computed in-process instead of via a Spark job.
     * Sized like [[graft.ops.Components.MaxLocalRootEdges]] — a bounded
-    * driver loop over data that is already driver-resident. Also the
-    * row budget of the ranked `/search` hit lists an
-    * [[graft.api.Api.Service]] holds.
+    * driver loop over data that is already driver-resident.
     */
-  private[graft] val MaxLocalStatsRows = 200000
+  private val MaxLocalStatsRows = 200000
 
   /** Byte budget for [[localized]]'s RETAINED driver copy (ADVICE r17):
     * the row cap alone is blind to row WIDTH — 200k rows of document
@@ -120,6 +120,9 @@ object Store {
     * collect below can never be the thing that kills the driver.
     */
   private val MaxLocalStatsBytes = 64L << 20
+
+  /** [[localized]]'s two caps, as a refusal names them. */
+  private[graft] val LocalCaps = s"$MaxLocalStatsRows rows, ${MaxLocalStatsBytes >> 20} MB"
 
   /** Sampled estimate of the collected rows' retained heap (long-lived
     * JVM object sizes, deliberately rough — this guards an order of
@@ -1518,7 +1521,7 @@ object Store {
       .filterNot(c => c == PartCol || c == GenCol || c == DelCol || c == idCol)
     // a key-only table still diffs (insert/delete only — nothing to update)
     val image: Column =
-      if (valCols.isEmpty) lit(0) else struct(valCols.map(col(_)): _*)
+      if (valCols.isEmpty) lit(0) else struct(ArraySeq.unsafeWrapArray(valCols.map(col(_))): _*)
     def snap(m: Manifest, as: String): DataFrame =
       readAt(spark, name, m.view.filterKeys(changedParts).toMap)
         .select(col(idCol), image.as(as))
@@ -1528,9 +1531,9 @@ object Store {
           .when(col("__post").isNull && col("__pre").isNotNull, lit("delete"))
           .when(!(col("__pre") <=> col("__post")), lit("update")))
       .filter(col("change_type").isNotNull)
-    diff.select(
+    diff.select(ArraySeq.unsafeWrapArray(
       col(idCol) +: col("change_type") +:
-        valCols.map(c => col(s"__post.$c").as(c)): _*)
+        valCols.map(c => col(s"__post.$c").as(c))): _*)
   }
 
   /** `disjointParts`: partitions PROVEN key-disjoint across their live
@@ -1639,7 +1642,7 @@ object Store {
       val merged = spark.table(name)
         .join(updates.select(col(idCol)), Seq(idCol), "left_anti")
         .unionByName(updates)
-        .select(spark.table(name).columns.map(col(_)): _*)
+        .select(ArraySeq.unsafeWrapArray(spark.table(name).columns.map(col(_))): _*)
         .localCheckpoint()
       merged.write.mode(SaveMode.Overwrite).insertInto(name)
       forceRefresh(spark, name)
@@ -1737,7 +1740,8 @@ object Store {
     // write emits per-PartCol bucketed files and the rename below adds
     // the `gen` dir level — so no per-generation literal ever enters the
     // write plan (the generated source is identical across triggers).
-    val shaped = withDefaults.select(columnOrder.filterNot(_ == GenCol).map(col(_)): _*)
+    val shaped = withDefaults.select(
+      ArraySeq.unsafeWrapArray(columnOrder.filterNot(_ == GenCol).map(col(_))): _*)
     // a failed stage releases its in-flight claim so vacuum can reclaim
     // the partial write instead of guarding it for the JVM lifetime
     try stageBucketedGen(spark, name, loc, fs, shaped, gen, touched, tableBuckets, idCol)
@@ -1877,7 +1881,7 @@ object Store {
     * bucket pruning recomputes), and a REPARTITION_BY_NUM shuffle is
     * never AQE-coalesced — so write-task index == bucket id, and the
     * task-index prefix of each staged file names its bucket. The rename
-    * in [[stageBucketedGen]] tags the name with the `_NNNNN` suffix the
+    * in [[publishStaged]] tags the name with the `_NNNNN` suffix the
     * bucketed scan parses. Within-task sort on (part, id) keeps the
     * dynamic writer sort-free and the file contents id-ordered like the
     * bucketed writer's.
@@ -1904,37 +1908,48 @@ object Store {
       val stageDir = new Path(loc, s"_stage-$gen")
       if (fs.exists(stageDir)) fs.delete(stageDir, true)
       stageWrite(spark, shaped, idCol, tableBuckets, stageDir, fs)
-      // a compaction fold can surface a partition whose surviving rows
-      // are ALL tombstoned away — no staged dir then, and none needed:
-      // the manifest points its live list at `gen`, which reads empty
-      // (exactly what the insertInto form produced)
-      val staged = touched.filter { p =>
-        val src = new Path(stageDir, s"$PartCol=$p")
-        fs.exists(src) && {
-          val parentDir = new Path(loc, s"$PartCol=$p")
-          if (!fs.exists(parentDir)) fs.mkdirs(parentDir)
-          val dst = new Path(parentDir, s"$GenCol=$gen")
-          require(fs.rename(src, dst), s"could not move staged generation into $dst")
-          tagBucketFiles(fs, dst)
-          true
-        }
-      }
-      fs.delete(stageDir, true) // _SUCCESS marker + emptied dirs
-      if (staged.nonEmpty) {
-        val specs = staged
-          .map(p => s"PARTITION ($PartCol=$p, $GenCol=$gen)").mkString(" ")
-        // quotedString, not a raw backtick: a db-qualified `db.t` backticked
-        // whole becomes ONE identifier and the ADD PARTITION fails
-        // (the ADVICE-r14 bug class, fixed here like markSynced)
-        val qn = spark.sessionState.sqlParser.parseTableIdentifier(name).quotedString
-        graft.tools.DriverProf.time("store.stage.addparts")(
-          spark.sql(s"ALTER TABLE $qn ADD IF NOT EXISTS $specs"))
-      }
-      ()
+      publishStaged(spark, name, loc, fs, stageDir,
+        touched.map(_ -> gen))((p, _) => s"$PartCol=$p")
     }
 
+  /** Moves each staged (partition, generation) dir — `stageDir/<staged(p, g)>`
+    * — to the table's `PartCol=p/GenCol=g`, bucket-tags its files, drops
+    * `stageDir`, and registers the moved dirs in one batched
+    * `ADD PARTITION`. A pair the write never produced is skipped: a
+    * compaction fold whose surviving rows were all tombstoned away, or a
+    * z-fold partition whose survivors all fell in other z-buckets. The
+    * manifest then points the partition's live list at a generation that
+    * reads empty, exactly what the insertInto form produced.
+    */
+  private def publishStaged(
+      spark: SparkSession, name: String, loc: Path, fs: FileSystem,
+      stageDir: Path, pairs: Seq[(Int, Long)])(staged: (Int, Long) => String): Unit = {
+    val moved = pairs.filter { case (p, g) =>
+      val src = new Path(stageDir, staged(p, g))
+      fs.exists(src) && {
+        val parentDir = new Path(loc, s"$PartCol=$p")
+        if (!fs.exists(parentDir)) fs.mkdirs(parentDir)
+        val dst = new Path(parentDir, s"$GenCol=$g")
+        require(fs.rename(src, dst), s"could not move staged generation into $dst")
+        tagBucketFiles(fs, dst)
+        true
+      }
+    }
+    fs.delete(stageDir, true) // _SUCCESS marker + emptied dirs
+    if (moved.nonEmpty) {
+      val specs = moved.map { case (p, g) =>
+        s"PARTITION ($PartCol=$p, $GenCol=$g)" }.mkString(" ")
+      // quotedString, not a raw backtick: a db-qualified `db.t` backticked
+      // whole becomes ONE identifier and the ADD PARTITION fails
+      // (the ADVICE-r14 bug class, fixed here like markSynced)
+      val qn = spark.sessionState.sqlParser.parseTableIdentifier(name).quotedString
+      graft.tools.DriverProf.time("store.stage.addparts")(
+        spark.sql(s"ALTER TABLE $qn ADD IF NOT EXISTS $specs"))
+    }
+  }
+
   /** Rename each staged file to carry its `_NNNNN` bucket tag — the
-    * task-index prefix IS the bucket id (see [[stageBucketedGen]]).
+    * task-index prefix IS the bucket id (see [[stageWrite]]).
     */
   private def tagBucketFiles(fs: FileSystem, dst: Path): Unit =
     fs.listStatus(dst).foreach { st =>
@@ -1953,14 +1968,12 @@ object Store {
 
   /** Multi-generation staging for the Z-order re-layout (r18):
     * [[stageBucketedGen]] with `GenCol` as a SECOND dynamic dir level
-    * (gen = base + z-prefix bucket, several generations per fold), same
-    * rename + bucket-tag + batched ADD PARTITION. Replaces the
-    * re-layout's `insertInto`, which paid the full catalog partition
-    * listing exactly when the table is largest — a whole-table
-    * re-layout. `pairs` is the (partition, generation) set the caller's
-    * envelope pass already computed; dirs the write never produced (a
-    * partition whose survivors all fell in other z-buckets) are skipped
-    * exactly like the empty-fold case.
+    * (gen = base + z-prefix bucket, several generations per fold),
+    * published by the same [[publishStaged]]. Replaces the re-layout's
+    * `insertInto`, which paid the full catalog partition listing exactly
+    * when the table is largest — a whole-table re-layout. `pairs` is the
+    * (partition, generation) set the caller's envelope pass already
+    * computed.
     */
   private def stageBucketedGens(
       spark: SparkSession, name: String, loc: Path, fs: FileSystem,
@@ -1974,26 +1987,7 @@ object Store {
           .sortWithinPartitions(col(PartCol), col(GenCol), col(idCol))
           .write.mode(SaveMode.Overwrite)
           .partitionBy(PartCol, GenCol).parquet(stageDir.toString))
-      val staged = pairs.filter { case (pt, g) =>
-        val src = new Path(stageDir, s"$PartCol=$pt/$GenCol=$g")
-        fs.exists(src) && {
-          val parentDir = new Path(loc, s"$PartCol=$pt")
-          if (!fs.exists(parentDir)) fs.mkdirs(parentDir)
-          val dst = new Path(parentDir, s"$GenCol=$g")
-          require(fs.rename(src, dst), s"could not move staged generation into $dst")
-          tagBucketFiles(fs, dst)
-          true
-        }
-      }
-      fs.delete(stageDir, true)
-      if (staged.nonEmpty) {
-        val specs = staged.map { case (pt, g) =>
-          s"PARTITION ($PartCol=$pt, $GenCol=$g)" }.mkString(" ")
-        val qn = spark.sessionState.sqlParser.parseTableIdentifier(name).quotedString
-        graft.tools.DriverProf.time("store.stage.addparts")(
-          spark.sql(s"ALTER TABLE $qn ADD IF NOT EXISTS $specs"))
-      }
-      ()
+      publishStaged(spark, name, loc, fs, stageDir, pairs)((p, g) => s"$PartCol=$p/$GenCol=$g")
     }
 
   /** Append `gen` to the touched partitions' live lists and commit — the
@@ -2407,7 +2401,7 @@ object Store {
       case None =>
         val gen = allocateGen(fs, loc, manifest)
         val folded = survivors
-          .select(columnOrder.filterNot(_ == GenCol).map(col(_)): _*)
+          .select(ArraySeq.unsafeWrapArray(columnOrder.filterNot(_ == GenCol).map(col(_))): _*)
           // materialize the fold (its footprint is the folded partitions,
           // not the table) so the append below does not read the table it
           // extends; stageBucketedGen applies the bucket repartition
@@ -2454,7 +2448,7 @@ object Store {
         // staged multi-gen write, not insertInto (r18): O(touched pairs)
         // catalog work for the one operation that touches every partition
         stageBucketedGens(spark, name, loc, fs,
-          zRows.drop("z", "z_bucket").select(columnOrder.map(col(_)): _*),
+          zRows.drop("z", "z_bucket").select(ArraySeq.unsafeWrapArray(columnOrder.map(col(_))): _*),
           gen0, envs.map(e => (e.part, e.gen)), tableBuckets, idCol)
         val gensByPart: Map[Int, Seq[Long]] = envs.groupBy(_.part)
           .map { case (p, es) => p -> es.map(_.gen).sorted.toSeq }

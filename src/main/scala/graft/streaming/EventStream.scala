@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ArraySeq
+
 /** Structured-Streaming twins of the batch event analytics
   * ([[graft.ops.Events]]). The reference has no streaming surface
   * (SURVEY §2.11); this is the beyond-parity extension over the `events`
@@ -892,7 +894,8 @@ object EventStream {
         if (!b.isEmpty) {
           val exists = graft.tools.DriverProf.time("es.tableExists")(spark.catalog.tableExists(sampleTable))
           val old =
-            if (exists) Store.read(spark, sampleTable).select(b.columns.map(col(_)): _*)
+            if (exists)
+              Store.read(spark, sampleTable).select(ArraySeq.unsafeWrapArray(b.columns.map(col(_))): _*)
             else b.filter(lit(false))
           val kept = trim(old.unionByName(b).dropDuplicates(idCol))
             // three consumers (both diffs + the write) and the diffs run

@@ -101,34 +101,11 @@ class ApiSpec extends SparkSpec {
       params = Map("q" -> "star", "size" -> "1.5")).status === 500)
   }
 
-  private lazy val withIndex = {
-    import org.apache.spark.sql.functions.{col, concat_ws}
-    val s = new Api.Service(
-      () => MovieLens.movies(spark, MovieLensFixture.dir),
-      sleep = _ => (),
-      loadPosting = Some(() => graft.search.Posting.buildPosting(
-        MovieLens.movies(spark, MovieLensFixture.dir), "movieId",
-        Seq("title" -> col("title"), "genres" -> concat_ws(" ", col("genres"))))))
-    assert(s.connect(maxRetries = 1, delayMs = 0L))
-    s
-  }
-
-  test("a posting-index-backed service serves BYTE-equal /search envelopes") {
-    // a repeated term counts once per occurrence on both routes
-    for (q <- Seq("star wras", "toy", "zzzzqq", "western western")) {
-      val plain = service.handle("GET", "/search", params = Map("q" -> q, "size" -> "25"))
-      val indexed = withIndex.handle("GET", "/search", params = Map("q" -> q, "size" -> "25"))
-      assert(Api.Json.render(indexed.body) === Api.Json.render(plain.body),
-        s"posting-backed /search diverged for '$q'")
-      assert(indexed.status === plain.status)
-    }
-  }
-
   test("a connected service answers /health with no Spark job and /movie with at most one") {
     // connect materializes the served tables; a request reads that copy
     // instead of re-planning and re-scanning the source table
     val sc = spark.sparkContext
-    val s = withIndex // connected outside the counted windows
+    val s = service // connected outside the counted windows
     val health = SparkEvents.during(sc) {
       assert(s.handle("GET", "/health").status === 200)
     }.jobs
@@ -147,7 +124,7 @@ class ApiSpec extends SparkSpec {
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
           e: Exception): Unit = { seen.incrementAndGet(); () }
     }
-    val s = withIndex
+    val s = service
     SparkEvents.drain(spark.sparkContext)
     spark.listenerManager.register(l)
     try {
@@ -163,19 +140,19 @@ class ApiSpec extends SparkSpec {
   test("/search serves a later page and a repeat of a ranked query with no Spark job") {
     val sc = spark.sparkContext
     val q = "the lion king"
-    val first = search(withIndex, q, "1", "10")
+    val first = search(service, q, "1", "10")
     assert(first.status === 200)
-    val page2 = SparkEvents.during(sc)(assert(search(withIndex, q, "2", "10").status === 200)).jobs
-    // the held list is keyed by analyzed terms: case and blanks do not matter
+    val page2 = SparkEvents.during(sc)(assert(search(service, q, "2", "10").status === 200)).jobs
+    // ranking reads the analyzed terms: case and blanks do not matter
     var repeat: Api.Response = null
-    val again = SparkEvents.during(sc) { repeat = search(withIndex, " The LION king ", "1", "10") }.jobs
+    val again = SparkEvents.during(sc) { repeat = search(service, " The LION king ", "1", "10") }.jobs
     assert(page2 === 0, s"page 2 of a ranked query ran $page2 Spark jobs")
     assert(again === 0, s"a repeat of page 1 ran $again Spark jobs")
     assert(Api.Json.render(repeat.body) === Api.Json.render(first.body))
   }
 
   test("on the driver-resident snapshot no route runs a Spark job, a first-seen /search included") {
-    val s = withIndex // connected outside the counted windows
+    val s = service // connected outside the counted windows
     val sc = spark.sparkContext
     var r: Api.Response = null
     val searchJobs = SparkEvents.during(sc) { r = search(s, "jurasic park", "1", "10") }.jobs
@@ -190,7 +167,7 @@ class ApiSpec extends SparkSpec {
       "Spark jobs per /search, /movie, /recommend")
   }
 
-  test("held-list /search pages are byte-equal to offset pagination over the hits") {
+  test("/search pages are byte-equal to offset pagination over the posting hits") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions.{col, concat_ws}
     val movies = MovieLens.movies(spark, MovieLensFixture.dir).cache()
@@ -212,7 +189,7 @@ class ApiSpec extends SparkSpec {
           val rows = Engine.searchViaPosting(movies, posting, q, p, sz).collect()
           val expected = Map("movies" -> rows.toSeq.map(doc), "page" -> p, "size" -> sz,
             "total" -> total)
-          val got = search(withIndex, q, page.toString, size.toString)
+          val got = search(service, q, page.toString, size.toString)
           assert(got.status === 200)
           assert(Api.Json.render(got.body) === Api.Json.render(expected),
             s"'$q' page=$page size=$size diverged")
@@ -222,15 +199,15 @@ class ApiSpec extends SparkSpec {
   }
 
   test("/search past the 10,000-row offset window keeps the 500 envelope") {
-    assert(search(withIndex, "star", "101", "100") ===
+    assert(search(service, "star", "101", "100") ===
       Api.Response(500, Map("error" -> "Internal server error")))
-    assert(search(withIndex, "star", "100", "100").status === 200)
+    assert(search(service, "star", "100", "100").status === 200)
   }
 
-  test("a 500 logs one WARN line naming the route and the exception") {
+  /** The lines `graft.api.Api` logs at WARN or above while `f` runs. */
+  private def warnings(f: => Unit): Seq[String] = {
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender
-    val s = withIndex
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val appender = new AbstractAppender("api-spec", null, null, true,
         org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
@@ -243,9 +220,14 @@ class ApiSpec extends SparkSpec {
     val level = logger.getLevel
     logger.setLevel(org.apache.logging.log4j.Level.WARN)
     logger.addAppender(appender)
-    try assert(search(s, "star", "101", "100").status === 500)
+    try f
     finally { logger.removeAppender(appender); logger.setLevel(level) }
-    val logged = lines.toArray.toSeq.map(_.toString)
+    lines.toArray.toSeq.map(_.toString)
+  }
+
+  test("a 500 logs one WARN line naming the route and the exception") {
+    val s = service
+    val logged = warnings(assert(search(s, "star", "101", "100").status === 500))
     assert(logged.size === 1, logged)
     assert(logged.head.startsWith(
       "WARN 500 on GET /search: java.lang.IllegalArgumentException: " +
@@ -254,7 +236,7 @@ class ApiSpec extends SparkSpec {
 
   test("two requests racing on one new query serve identical bodies") {
     val q = "godfather part"
-    val s = withIndex
+    val s = service
     val start = new java.util.concurrent.CountDownLatch(1)
     val bodies = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val threads = (1 to 2).map { _ =>
@@ -282,7 +264,9 @@ class ApiSpec extends SparkSpec {
 
   test("backend-down guard: 503 envelope per request; health 503") {
     val down = new Api.Service(() => sys.error("no store"), sleep = _ => ())
-    assert(!down.connect(maxRetries = 2, delayMs = 1L))
+    val logged = warnings(assert(!down.connect(maxRetries = 2, delayMs = 1L)))
+    assert(logged === Seq(1, 2).map(n =>
+      s"WARN connect attempt $n/2 failed: java.lang.RuntimeException: no store"))
     assert(down.handle("GET", "/search", params = Map("q" -> "x")) ===
       Api.Response(503, Map("error" -> "Service temporarily unavailable")))
     val h = down.handle("GET", "/health")
@@ -299,8 +283,27 @@ class ApiSpec extends SparkSpec {
         if (calls < 3) sys.error("warming up") else MovieLens.movies(spark, MovieLensFixture.dir)
       },
       sleep = _ => sleeps += 1)
-    assert(flaky.connect(maxRetries = 5, delayMs = 10L))
+    val logged = warnings(assert(flaky.connect(maxRetries = 5, delayMs = 10L)))
     assert(calls === 3 && sleeps === 2, s"calls=$calls sleeps=$sleeps")
+    assert(logged === Seq(1, 2).map(n =>
+      s"WARN connect attempt $n/5 failed: java.lang.RuntimeException: warming up"))
+  }
+
+  test("a movies frame past Store.localized's row cap fails connect; routes answer 503") {
+    import org.apache.spark.sql.functions.{array, col, concat, lit}
+    val big = spark.range(200001).select(
+      col("id").cast("int").as("movieId"),
+      concat(lit("Movie "), col("id").cast("string")).as("title"),
+      lit("01-Jan-1995").as("release_date"),
+      array(lit("Drama")).as("genres"))
+    val refused = new Api.Service(() => big, sleep = _ => ())
+    val logged = warnings(assert(!refused.connect(maxRetries = 1, delayMs = 0L)))
+    assert(logged === Seq("WARN connect attempt 1/1 failed: java.lang.IllegalArgumentException: " +
+      "requirement failed: the movies frame is not driver-resident " +
+      "(Store.localized caps: 200000 rows, 64 MB)"))
+    assert(refused.handle("GET", "/health").status === 503)
+    assert(refused.handle("GET", "/search", params = Map("q" -> "movie")) ===
+      Api.Response(503, Map("error" -> "Service temporarily unavailable")))
   }
 
   test("Json.render produces valid JSON for every envelope shape") {
